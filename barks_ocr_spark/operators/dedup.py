@@ -13,9 +13,9 @@ Scale notes (the whole point of each design):
   candidates = docs sharing a (band, band_signature) bucket. The only
   shuffle is on the band key. The k hashes are one `aggregate` over the
   shingle array — no UDF.
-- SimHash: 64-bit signature from per-token xxhash64 bit votes; near-dups
-  share all but ≤ hamming_budget bits. Bucketing on rotated prefixes makes
-  it shuffle-bounded.
+- SimHash: 64-bit signature from per-token hash bit votes, folded per
+  Arrow batch in numpy; near-dups share all but ≤ hamming_budget bits.
+  Bucketing on rotated prefixes makes it shuffle-bounded.
 - Embedding cosine: exact top-threshold pairs via block-nested join only
   within LSH buckets (see simsearch.py for the bucketing).
 """
@@ -116,6 +116,32 @@ def hot_shingles(
     )
 
 
+def _threshold_ratio(threshold: float) -> tuple[int, int]:
+    """(p, q) with ⌈p·n/q⌉ = ⌈threshold·n⌉ for all 0 ≤ n ≤ 2³² (two
+    array sizes) and thresholds in [0, 2], from the exact value of
+    ``str(threshold)``. Clamps keep p·2³² + q inside decimal(38,0) and
+    change no prefix: t < 0 acts as 0 (whole prefix), 0 < t < 2⁻³³ as
+    2⁻³³ (⌈t·n⌉ = 1 for n ≥ 1), t > 2 as 2 (no prefix; no pair passes
+    t > 1 anyway)."""
+    from fractions import Fraction
+
+    fr = min(max(Fraction(str(threshold)), Fraction(0)), Fraction(2))
+    if 0 < fr < Fraction(1, 2**33):
+        fr = Fraction(1, 2**33)
+    return fr.numerator, fr.denominator
+
+
+def _ceil_ratio(n_sql: str, p: int, q: int) -> Column:
+    """⌈p·n/q⌉ exactly, as a long: decimal(38,0) multiply-add, then
+    integral ``div``. Long arithmetic overflows once p·n passes 2⁶³
+    (t = 0.8000000000000002 has p ≈ 4·10¹⁵: ARITHMETIC_OVERFLOW from
+    ~2300 shingles) and a double ``/`` rounds before the floor."""
+    return F.expr(
+        f"(CAST({p} AS DECIMAL(38,0)) * CAST({n_sql} AS DECIMAL(38,0))"
+        f" + {q - 1}) div {q}"
+    )
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -168,8 +194,9 @@ def ngram_jaccard_pairs(
        min/max < threshold before the candidate distinct loses no
        surviving pair.
 
-    The hot-shingle cap uses the true per-DOC frequency (a tiny
-    aggregate collected into a one-row array and removed array-side).
+    The hot-shingle cap uses the true per-DOC frequency: a tiny
+    aggregate of shingles over the cap, removed from the postings by a
+    broadcast left-anti join on the shingle hash.
     Measured at sf1.0 / local[32] (a 2×-duplicated 100k-doc corpus),
     best-of-2: 104.9 s (r6 self-join) → 24.9 s (hash postings + prune)
     → 13.6 s (distinct-set collapse) → see OPTIMIZATION_r07.md for the
@@ -310,18 +337,12 @@ def ngram_jaccard_pairs(
     # stream drops 128M → 23M rows (ratio-pruned 47M → 8.5M) — the
     # pair-count aggregate over ~all-distinct keys that was half this
     # operator is replaced by a 5.5× smaller distinct + an
-    # output-proportional array intersect. ⌈t·n⌉ is computed in exact
-    # integer arithmetic from Fraction(threshold) — a float ceil that
-    # lands one too high silently shortens the prefix and can MISS
-    # pairs at any corpus size.
-    from fractions import Fraction
-
-    fr = Fraction(str(threshold))
-    ta, tb = fr.numerator, fr.denominator
-    c_req = F.floor(
-        (F.lit(ta) * F.col("n_shingles") + F.lit(tb - 1)) / F.lit(tb)
-    ).cast("int")
-    plen = F.greatest(F.col("_m") - c_req + 1, F.lit(0))
+    # output-proportional array intersect. ⌈t·n⌉ is computed exactly
+    # (see _ceil_ratio) — a float ceil that lands one too high silently
+    # shortens the prefix and can MISS pairs at any corpus size.
+    ta, tb = _threshold_ratio(threshold)
+    c_req = _ceil_ratio("n_shingles", ta, tb)
+    plen = F.greatest(F.col("_m") - c_req + 1, F.lit(0)).cast("int")
     # The bitmap prefilter runs IN-TASK during pair generation: each
     # posting element carries its set's (id, n, collision count, 16-word
     # bitmap), so the bound below is a projection over the exploded pair
@@ -337,8 +358,8 @@ def ngram_jaccard_pairs(
     # count m − bit_count(b), so
     #   bit_count(AND) + min(coll_x, coll_y) ≥ c
     # is a true upper bound. Dropping pairs whose bound is below the
-    # minimum passing intersection c ≥ ⌈t·(n_a+n_b)/(1+t)⌉ (exact
-    # integer arithmetic from the same Fraction) is therefore lossless.
+    # minimum passing intersection c ≥ ⌈t·(n_a+n_b)/(1+t)⌉ (exact, from
+    # the same ratio) is therefore lossless.
     # A random pair shares ~|x|·|y|/1024 bits, far below the ~0.9·n a
     # passing pair needs, so ~all of the pair stream dies on a 128-byte
     # AND before any shuffle; the exact array_intersect verify then
@@ -370,9 +391,9 @@ def ngram_jaccard_pairs(
     ub = F.least(x["_coll"], y["_coll"])
     for w in range(16):
         ub = ub + F.bit_count(x[f"_b{w}"].bitwiseAND(y[f"_b{w}"]))
-    c_min = F.floor(
-        (F.lit(ta) * (n_x + n_y) + F.lit(ta + tb - 1)) / F.lit(ta + tb)
-    ).cast("int")
+    c_min = _ceil_ratio(
+        "CAST(_x.n_shingles AS BIGINT) + _y.n_shingles", ta, ta + tb
+    )
     surv = (
         postings.select(F.explode("_ds").alias("_x"), "_ds")
         .select("_x", F.explode("_ds").alias("_y"))
@@ -417,25 +438,18 @@ def ngram_jaccard_pairs(
     return cross.unionAll(same)
 
 
-def minhash_signatures(
-    docs: DataFrame, text_col: str = "text", n: int = 3, k: int = 64
-) -> DataFrame:
-    """(doc_id, sig: array<bigint>[k]) MinHash signatures, all JVM-side.
-
-    Shape: explode shingles once, hash each shingle with k seeds, then
-    ``groupBy(doc_id).agg(min(h_0), …, min(h_{k-1}))`` — partial (map-side)
-    aggregation makes the shuffle k longs per doc. The tempting
-    alternative — nested ``transform(seeds, array_min(transform(...)))``
-    over a shingles column — is catastrophically slower: Catalyst's
-    projection collapse inlines the whole canonicalize/split/distinct
-    pipeline into every seed lambda (measured ~20× slower on 1k docs).
-    """
-    return minhash_signatures_from_shingles(shingle_table(docs, text_col, n), k)
-
-
 def minhash_signatures_from_shingles(sh: DataFrame, k: int = 64) -> DataFrame:
-    """Signatures from an existing (doc_id, shingle) table — lets callers
-    share one shingle pass across signature and verification stages.
+    """(doc_id, sig: array<bigint>[k]) MinHash signatures, all JVM-side,
+    from an existing (doc_id, shingle) table — lets callers share one
+    shingle pass across signature and verification stages.
+
+    Shape: hash each shingle row, then ``groupBy(doc_id).agg(min(h_0),
+    …, min(h_{k-1}))`` — partial (map-side) aggregation makes the
+    shuffle k longs per doc. The tempting alternative — nested
+    ``transform(seeds, array_min(transform(...)))`` over a shingles
+    column — is catastrophically slower: Catalyst's projection collapse
+    inlines the whole canonicalize/split/distinct pipeline into every
+    seed lambda (measured ~20× slower on 1k docs).
 
     Hash family: two xxhash64 seeds combined per slot as
     h_i = h1 XOR rotl(h2, i) — 2 string hashes per shingle row instead
@@ -656,76 +670,27 @@ def minhash_near_duplicates(
     return cross.unionAll(same)
 
 
-def simhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """64-bit SimHash per doc from word-level xxhash64 bit votes.
-
-    sig bit j = 1 iff sum over tokens of (bit j of xxhash64(token) ? +1
-    : -1) > 0. Expressed as nested `transform`/`aggregate` — JVM-side.
-    """
-    # Same explode-then-aggregate shape as minhash_signatures (avoids
-    # lambda-inlined recomputation of the tokenize pipeline): one hash per
-    # token row, 64 per-bit vote sums via partial aggregation.
-    words = F.split(canonical_text(F.col(text_col)), " ")
-    tok = (
-        docs.select("doc_id", F.explode(words).alias("word"))
-        .filter(F.col("word") != "")
-        # materialize the hash once per token row: codegen does not CSE
-        # across aggregate children, so an inlined xxhash64(word) would
-        # re-hash the string in every one of the 64 vote sums (same
-        # measured trap as minhash_signatures_from_shingles)
-        .select("doc_id", F.xxhash64(F.col("word")).alias("_h"))
-        # pre-aggregate token multiplicity with ONE counter, then run
-        # the 64 vote sums weighted by count over the collapsed table:
-        # Σ_tokens f(h) ≡ Σ_h cnt·f(h) exactly (pure regrouping), and
-        # the wide aggregate sees |distinct (doc, h)| rows instead of
-        # |tokens| (signature stage measured 10.2s → 4.5s cold at sf0.1;
-        # the remainder is the canonicalize/explode scan, not the votes)
-        .groupBy("doc_id", "_h")
-        .agg(F.count("*").alias("_c"))
-    )
-    h, c = F.col("_h"), F.col("_c")
-    # Bit masks as literals (shiftleft needs a constant shift); bit 63 is
-    # the long sign bit, hence the negative literal.
-    masks = [1 << j for j in range(63)] + [-(1 << 63)]
-    votes = [
-        F.sum(F.when(h.bitwiseAND(F.lit(m).cast("long")) != 0, c).otherwise(-c)).alias(
-            f"v{j}"
-        )
-        for j, m in enumerate(masks)
-    ]
-    agg = tok.groupBy("doc_id").agg(*votes)
-    sig = None
-    for j, m in enumerate(masks):
-        bit = F.when(F.col(f"v{j}") > 0, F.lit(m).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        sig = bit if sig is None else sig + bit
-    return agg.select("doc_id", sig.alias("simhash"))
-
-
 def simhash_signatures_kernel(
     docs: DataFrame, text_col: str = "text"
 ) -> DataFrame:
-    """Zero-shuffle SimHash signatures: the per-batch numpy kernel form
-    of :func:`simhash_signatures`. A signature is a pure function of one
-    document, so the relational form's two exchanges (token collapse +
-    64-vote aggregate) pay a corpus-proportional shuffle for a per-doc
-    computation — the same critique, and the same fix, as
-    repetition_scores. Here each Arrow batch canonicalizes + tokenizes
-    in Python, hashes every token occurrence in one vectorized C call
-    (``pandas.util.hash_array``, SipHash with a fixed key — process- and
-    run-stable), and folds the ±1 bit votes per doc in numpy.
+    """Zero-shuffle 64-bit SimHash signatures (doc_id, simhash): sig
+    bit j = 1 iff the ±1 votes of bit j over the doc's token hashes sum
+    to > 0. A signature is a pure function of one document, so it runs
+    as a per-batch numpy kernel — the same fix as repetition_scores.
+    Each Arrow batch canonicalizes + tokenizes in Python, hashes every
+    token occurrence in one vectorized C call (``pandas.util.hash_array``,
+    SipHash with a fixed key — process- and run-stable), and folds the
+    ±1 bit votes per doc in numpy.
 
-    Same contract as the relational form: docs with zero tokens after
-    canonicalization yield NO signature row; identical text ⇒ identical
-    signature; near text ⇒ near signature. Signature VALUES differ from
-    the relational form (xxhash64 vs SipHash token hashing — documented,
-    both deterministic); everything downstream is hash-agnostic.
+    Contract: docs with zero tokens after canonicalization yield NO
+    signature row; identical text ⇒ identical signature; near text ⇒
+    near signature. Everything downstream is hash-agnostic.
 
-    Measured at sf0.1 / local[32], best-of-2: signatures 1.94 s
-    (relational) → 0.50 s (kernel); full near-dup pair query 3.54 s →
-    2.00 s. The gap is the eliminated token-collapse + 64-vote
-    exchanges, so it grows with corpus size.
+    Measured at sf0.1 / local[32], best-of-2, against the relational
+    xxhash64 explode + 64-vote aggregate form it replaced: signatures
+    1.94 s → 0.50 s; full near-dup pair query 3.54 s → 2.00 s. The gap
+    is the eliminated token-collapse + vote exchanges, so it grows with
+    corpus size.
     """
     kernel = F.pandas_udf(_simhash_batch, "long")
     return (
@@ -742,10 +707,10 @@ def _simhash_batch(texts):  # type: (pd.Series) -> pd.Series
     import pandas as pd
 
     # re.ASCII: Python's Unicode \s also matches NBSP/U+2028/\x85, which
-    # the relational form's Java regex (canonical_text) does NOT — those
-    # must be STRIPPED (non-alnum), not treated as token separators, or
-    # fingerprint-equal docs with exotic whitespace tokenize differently
-    # per form and fail to pair at hamming 0.
+    # the Java regex of canonical_text (the exact-dup fingerprint) does
+    # NOT — those must be STRIPPED (non-alnum), not treated as token
+    # separators, so tokens follow the same canonical form as the
+    # corpus fingerprint.
     #
     # Fully vectorized (guide §4.2 — hand whole batches to native code):
     # canonicalization via pandas C string kernels, token hashing in one
@@ -867,14 +832,12 @@ def hot_simhash_buckets(
     text_col: str = "text",
     max_hamming: int = 3,
     max_bucket_size: int = 1000,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """(seg, val, n_sigs) segment buckets holding more DISTINCT
     signatures than ``max_bucket_size`` — the audit view for
     simhash_near_duplicates's optional bucket cap ('log what was
     dropped': count() this before capping a production run)."""
-    sig_fn = simhash_signatures_kernel if use_kernel else simhash_signatures
-    usig = sig_fn(docs, text_col).select("simhash").distinct()
+    usig = simhash_signatures_kernel(docs, text_col).select("simhash").distinct()
     return (
         simhash_segment_table(usig, max_hamming)
         .groupBy("seg", "val")
@@ -887,7 +850,6 @@ def simhash_near_duplicates(
     docs: DataFrame,
     text_col: str = "text",
     max_hamming: int = 3,
-    use_kernel: bool = True,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """SimHash near-dup pairs with hamming distance ≤ max_hamming.
@@ -917,12 +879,10 @@ def simhash_near_duplicates(
     would drop via :func:`hot_simhash_buckets`. Capping loses only pairs
     whose EVERY agreeing segment is hot.
 
-    ``use_kernel`` picks the zero-shuffle signature kernel (default);
-    pass False for the relational xxhash64 form (signature values
-    differ between the two, pair semantics do not).
+    Signatures come from the zero-shuffle kernel
+    :func:`simhash_signatures_kernel`.
     """
-    sig_fn = simhash_signatures_kernel if use_kernel else simhash_signatures
-    sigs = _persist(sig_fn(docs, text_col))
+    sigs = _persist(simhash_signatures_kernel(docs, text_col))
     sigs.count()
     usig = sigs.select("simhash").distinct()
     exploded = _persist(simhash_segment_table(usig, max_hamming))

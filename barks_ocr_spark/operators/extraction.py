@@ -2,22 +2,26 @@
 
 Physical shape (designed for a 10^12-doc table):
 
-  Pass 1 (tiny shuffle): heading candidates → groupBy(variant)
-      .agg(countDistinct(doc_id)) → filter ≥3. Candidates are rare
-      (headers/page-number-shaped spans only) and short strings, so this
-      aggregate is a few MB at any corpus size; the surviving set is
-      collected and broadcast (`books/src/book_pages.py:295-321`'s
-      two-pass repeated-heading rule, distributed).
+  Pass 1 (tiny shuffle): heading candidates via mapInArrow
+      (kernels/arrowspans.heading_candidates_batch) → groupBy(variant)
+      .count() → filter ≥3. Candidates are rare (headers/page-number-
+      shaped spans only) and short strings, so this aggregate is a few
+      MB at any corpus size; the surviving set is collected and
+      broadcast (`books/src/book_pages.py:295-321`'s two-pass
+      repeated-heading rule, distributed).
 
-  Pass 2 (narrow, shuffle-free): mapInPandas over the docs table runs the
-      whole per-document kernel (kernels/spans.py) on Arrow batches. Every
-      document's work is intra-row, so this stage scales linearly with
-      executors — no join, no shuffle, no skewed keys. Skewed giant docs
-      (splash pages with 100× spans) are stragglers, not hot shuffle
-      keys; `repartition(doc_id)` before the kernel spreads them evenly.
+  Pass 2 (narrow, shuffle-free): mapInArrow over the docs table runs the
+      whole per-document kernel (kernels/arrowspans.extract_batch) on raw
+      Arrow RecordBatches. Every document's work is intra-row, so this
+      stage scales linearly with executors — no join, no shuffle, no
+      skewed keys. Skewed giant docs (splash pages with 100× spans) are
+      stragglers, not hot shuffle keys; `repartition(doc_id)` before the
+      kernel spreads them evenly.
 
-All string work is vectorized pandas inside the batch — no per-row
-Python UDFs anywhere.
+Batch and streaming (streaming/incremental.py) run this same pass 2.
+Both Arrow kernels are checked against the golden pandas spec
+(kernels/spans.py), which only the tests run. No per-row Python UDFs
+anywhere.
 """
 
 from __future__ import annotations
@@ -28,73 +32,17 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from barks_ocr_spark.kernels import spans as span_kernel
 from barks_ocr_spark.kernels import textnorm as tn
 from barks_ocr_spark.schemas import DOCUMENTS_SPANS_SCHEMA
 
-_CANDIDATE_SCHEMA = "doc_id string, variant string"
-
-# JVM translations of the kernels/textnorm boilerplate predicates —
-# anchored Java-regex forms of the same patterns (parity guarded by the
-# Spark-vs-golden e2e tests, which compute the repeating set through the
-# pandas kernel and require byte-identical final spans).
-_PAGE_NUM_TOKEN = r"(?:[ivxlcdmIVXLCDM]{1,8}|\d{1,3})"
-_HEADER_SHAPE_RE = rf"^(?:{_PAGE_NUM_TOKEN}\s+\S.*|\S.*\s+{_PAGE_NUM_TOKEN})$"
-
 
 def heading_candidates(docs: DataFrame) -> DataFrame:
-    """(doc_id, variant) candidate pairs — pure JVM expressions.
-
-    This pass touches every span of every document, so it must scale like
-    a scan: explode + rlike keeps it inside whole-stage codegen with no
-    Python workers (the earlier mapInPandas variant pinned ~13s of
-    Arrow+pandas flatten cost per run that did not parallelize away).
-    """
-    # regexp strip, not F.trim: trim removes ASCII spaces only, while the
-    # golden pandas kernel uses .str.strip() (all whitespace) — tab/newline
-    # edge whitespace must produce the same variants in both paths
-    t = F.regexp_replace(F.col("s.text"), r"^\s+|\s+$", "")
-    header_shape = t.rlike(_HEADER_SHAPE_RE)
-    all_caps = (
-        t.rlike("[A-Za-z]") & ~t.rlike("[a-z]")
-    )
-    candidate = (
-        (F.length(t) > 0)
-        & (F.length(t) <= tn.MAX_RUNNING_HEADER_LEN)
-        & (header_shape | all_caps)
-        & ~t.startswith(tn.REPRINTED_PREFIX)
-        & t.rlike("[A-Za-z]")
-    )
-    stripped = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(t, rf"^{_PAGE_NUM_TOKEN}\s+", ""),
-            rf"\s+{_PAGE_NUM_TOKEN}$",
-            "",
-        ),
-        r"^\s+|\s+$",
-        "",
-    )
-    return (
-        docs.select("doc_id", F.explode("spans").alias("s"))
-        .filter((F.col("s.kind") == "text") & candidate)
-        .select(
-            "doc_id",
-            F.explode(F.array_distinct(F.array(t, stripped))).alias("variant"),
-        )
-        .filter(F.length("variant") > 0)
-        .dropDuplicates(["doc_id", "variant"])
-    )
-
-
-def heading_candidates_arrow(docs: DataFrame) -> DataFrame:
-    """(doc_id, variant) candidates via the Arrow kernel (fast path).
-
-    Same output contract as :func:`heading_candidates` (parity pinned by
-    tests/test_arrow_kernel.py) but the per-span regex work runs as RE2
-    passes inside mapInArrow — measured ~2× the JVM-regex pass-1
-    throughput with better core scaling, and it shares the exact
-    pandas-`str.strip` whitespace semantics of the golden kernel instead
-    of re-deriving them in Java regex.
+    """(doc_id, variant) pass-1 candidates via the Arrow kernel: the
+    per-span regex work runs as RE2 passes inside mapInArrow, with the
+    exact pandas-`str.strip` whitespace semantics of the golden kernel
+    (parity pinned by tests/test_arrow_kernel.py). Measured ~2× the
+    throughput of the JVM-regex explode pass it replaced, with better
+    core scaling.
     """
     import pyarrow as pa
 
@@ -116,34 +64,26 @@ def heading_candidates_arrow(docs: DataFrame) -> DataFrame:
     )
 
 
-def repeating_headings_counted(docs: DataFrame, kernel: str = "arrow") -> DataFrame:
+def repeating_headings_counted(docs: DataFrame) -> DataFrame:
     """variants appearing on ≥3 distinct docs, with their distinct-doc
     counts (A7). Returns DataFrame[variant, n_docs]."""
-    cand = (
-        heading_candidates_arrow(docs)
-        if kernel == "arrow"
-        else heading_candidates(docs)
-    )
-    # The arrow kernel emits (doc_id, variant) pairs ALREADY distinct per
+    # The kernel emits (doc_id, variant) pairs ALREADY distinct per
     # document (batch-local dedup + one row per doc per batch), so the
     # distinct-doc count is a plain count(*) — no distinct-expand, the
     # aggregate shuffles 33k partial counts instead of re-deduplicating
     # 3.8M pairs (measured 9.3s → 7.4s for the pass-1 aggregate at 32
-    # cores on 2.4M docs). The relational path gives no such invariant
-    # and keeps the exact countDistinct.
-    n_docs = (
-        F.count("*") if kernel == "arrow" else F.countDistinct("doc_id")
-    )
+    # cores on 2.4M docs).
     return (
-        cand.groupBy("variant")
-        .agg(n_docs.alias("n_docs"))
+        heading_candidates(docs)
+        .groupBy("variant")
+        .agg(F.count("*").alias("n_docs"))
         .filter(F.col("n_docs") >= tn.RUNNING_HEADER_REPEAT_THRESHOLD)
     )
 
 
-def repeating_headings(docs: DataFrame, kernel: str = "arrow") -> DataFrame:
+def repeating_headings(docs: DataFrame) -> DataFrame:
     """variants appearing on ≥3 distinct docs (A7). Returns DataFrame[variant]."""
-    return repeating_headings_counted(docs, kernel=kernel).select("variant")
+    return repeating_headings_counted(docs).select("variant")
 
 
 # Driver-memory bound on the broadcast heading set. Genuine running
@@ -155,7 +95,6 @@ DEFAULT_MAX_REPEATING_VARIANTS = 100_000
 
 def repeating_heading_set(
     docs: DataFrame,
-    kernel: str = "arrow",
     max_variants: int = DEFAULT_MAX_REPEATING_VARIANTS,
 ) -> frozenset[str]:
     """Pass-1 result as the driver-side broadcast set, with a BOUNDED
@@ -167,7 +106,7 @@ def repeating_heading_set(
     never holds more than the cap. Truncation is logged: silent caps
     read as full coverage when they aren't."""
     rows = (
-        repeating_headings_counted(docs, kernel=kernel)
+        repeating_headings_counted(docs)
         .orderBy(F.desc("n_docs"), "variant")
         .limit(max_variants + 1)
         .collect()
@@ -215,25 +154,28 @@ def extract(
     page_scans: DataFrame | None = None,
     repeating: frozenset[str] | None = None,
     num_partitions: int | None = None,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Full extraction: returns (doc_id, spans) with the output contract
     of kernels/spans.py (span-sequence equality key: kind, text,
     media_ref, order).
 
-    ``kernel="arrow"`` (default) runs the pass-2 kernel via mapInArrow on
-    raw RecordBatches (kernels/arrowspans.py): no Python-object span
-    materialization, RE2 string passes on contiguous buffers — ~4×
-    faster per core than the pandas kernel and far lighter on memory
-    bandwidth, which is what multi-core scaling is bound by.
-    ``kernel="pandas"`` keeps the golden pandas path (kernels/spans.py);
-    byte-identical output is pinned by tests/test_arrow_kernel.py and
-    the e2e golden tests.
+    Pass 2 runs via mapInArrow on raw RecordBatches
+    (kernels/arrowspans.py): no Python-object span materialization, RE2
+    string passes on contiguous buffers — ~4× faster per core than the
+    golden pandas kernel and far lighter on memory bandwidth, which is
+    what multi-core scaling is bound by. Byte-identical output against
+    the golden spec is pinned by tests/test_arrow_kernel.py and the e2e
+    golden tests. Works unchanged on a streaming ``docs`` when
+    ``repeating`` is given (pass 1 is a global aggregate).
     """
+    import pyarrow as pa
+
+    from barks_ocr_spark.kernels import arrowspans
+
     spark = docs.sparkSession
     if repeating is None:
         # bounded deterministic collect — see repeating_heading_set
-        repeating = repeating_heading_set(docs, kernel=kernel)
+        repeating = repeating_heading_set(docs)
     bc = spark.sparkContext.broadcast(repeating)
 
     if page_scans is not None:
@@ -242,27 +184,12 @@ def extract(
         # spread skewed giant docs (single rows) evenly across tasks
         docs = docs.repartition(num_partitions, "doc_id")
 
-    narrow = docs.select("doc_id", "spans")
-    if kernel == "arrow":
-        import pyarrow as pa
-
-        from barks_ocr_spark.kernels import arrowspans
-
-        def _gen_arrow(
-            batches: Iterator[pa.RecordBatch],
-        ) -> Iterator[pa.RecordBatch]:
-            rep = bc.value
-            for batch in batches:
-                yield arrowspans.extract_batch(batch, rep)
-
-        return narrow.mapInArrow(_gen_arrow, DOCUMENTS_SPANS_SCHEMA)
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         rep = bc.value
         for batch in batches:
-            yield span_kernel.extract_documents(batch, rep)
+            yield arrowspans.extract_batch(batch, rep)
 
-    return narrow.mapInPandas(_gen, DOCUMENTS_SPANS_SCHEMA)
+    return docs.select("doc_id", "spans").mapInArrow(_gen, DOCUMENTS_SPANS_SCHEMA)
 
 
 def extraction_metrics(result: DataFrame) -> DataFrame:

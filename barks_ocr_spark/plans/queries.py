@@ -2369,7 +2369,7 @@ def q_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     On this corpus (no terminal punctuation → every span is open, no
     planted noise) the pipeline provably reduces to merge-all + casing +
     whitespace collapse, giving an exact SQL oracle for the end-to-end
-    Spark job — a differential test of the whole mapInPandas path.
+    Spark job — a differential test of the whole mapInArrow path.
     """
     result = extraction.extract(_spanized_docs(spark, sf_dir))
     return result.select(

@@ -255,19 +255,19 @@ def test_curlify_vec_matches_reference_scan():
     assert got == want
 
 
-def test_spark_arrow_path_matches_pandas_path(spark):
+def test_spark_extract_matches_golden_spec(spark):
+    # the production Spark job (Arrow pass 1 + pass 2 over 8 partitions)
+    # against the driver-side golden spec run on the whole corpus
     from barks_ocr_spark.datagen import docs as dg
     from barks_ocr_spark.operators import extraction
     from barks_ocr_spark.schemas import DOCUMENTS_SPANS_SCHEMA
 
     pdf = dg.gen_documents(400, seed=21)
     docs = spark.createDataFrame(pdf, schema=DOCUMENTS_SPANS_SCHEMA).repartition(8)
-    a = {
+    got = {
         r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans]
-        for r in extraction.extract(docs, kernel="arrow").collect()
+        for r in extraction.extract(docs).collect()
     }
-    p = {
-        r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans]
-        for r in extraction.extract(docs, kernel="pandas").collect()
-    }
-    assert a == p
+    golden = pk.extract_documents(pdf, pk.repeating_headings_from_flat(pk.flatten(pdf)))
+    want = {r.doc_id: _spans_key(r.spans) for r in golden.itertuples()}
+    assert got == want

@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
+from fractions import Fraction
+
 import pandas as pd
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from barks_ocr_spark.operators import dedup, simsearch
@@ -84,6 +88,70 @@ def test_ngram_jaccard_prefix_and_bitmap_are_lossless(spark):
     assert got == want
     assert any(v < 1.0 for v in want.values())  # near-dups present
     assert any(v == 1.0 for v in want.values())  # twins present
+
+
+def test_ngram_jaccard_long_docs_with_long_threshold_repr(spark):
+    # A threshold whose shortest repr has 16 digits after the point
+    # (0.8000000000000002 = 4000000000000001/5000000000000000) made the
+    # prefix ceiling ⌈t·n⌉ overflow Spark long arithmetic on a 2,600-word
+    # doc (ARITHMETIC_OVERFLOW), while threshold=0.8 found the pair.
+    import random
+
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(5000)]
+    words = [rng.choice(vocab) for _ in range(2600)]
+    near = list(words)
+    for i in range(0, 2600, 400):
+        near[i] = "edited"
+    docs = spark.createDataFrame(
+        [(1, " ".join(words)), (2, " ".join(near))], "doc_id long, text string"
+    )
+    got = {
+        t: [
+            (r["doc_a"], r["doc_b"], r["jaccard"])
+            for r in dedup.ngram_jaccard_pairs(docs, threshold=t).collect()
+        ]
+        for t in (0.8, 0.8000000000000002)
+    }
+    assert len(got[0.8]) == 1 and got[0.8][0][:2] == (1, 2)
+    assert got[0.8000000000000002] == got[0.8]
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    thresholds=st.lists(
+        st.one_of(
+            st.floats(min_value=0.0, max_value=2.0),
+            st.sampled_from([0.8000000000000002, 0.7 + 0.1, 1e-300, 5e-324]),
+        ),
+        min_size=1,
+        max_size=6,
+    ),
+    ns=st.lists(
+        st.one_of(
+            st.integers(min_value=0, max_value=10_000),
+            st.integers(min_value=0, max_value=2**32),
+        ),
+        min_size=1,
+        max_size=12,
+    ),
+)
+def test_prefix_ceilings_are_exact(spark, thresholds, ns):
+    # ⌈t·n⌉ (prefix length) and ⌈t·n/(1+t)⌉ (bitmap bound) must equal
+    # exact integer ceilings over the float's decimal value for every
+    # set size, including sizes far past where p·n leaves the long range
+    cols = []
+    for i, t in enumerate(thresholds):
+        p, q = dedup._threshold_ratio(t)
+        cols.append(dedup._ceil_ratio("n", p, q).alias(f"c{i}"))
+        cols.append(dedup._ceil_ratio("n", p, p + q).alias(f"m{i}"))
+    df = spark.createDataFrame([(n,) for n in ns], "n long")
+    for r in df.select("n", *cols).collect():
+        for i, t in enumerate(thresholds):
+            fr = Fraction(str(t))
+            ta, tb = fr.numerator, fr.denominator
+            assert r[f"c{i}"] == -(-ta * r["n"] // tb), (t, r["n"])
+            assert r[f"m{i}"] == -(-ta * r["n"] // (ta + tb)), (t, r["n"])
 
 
 def test_minhash_finds_planted_dups(spark):
@@ -337,16 +405,11 @@ def test_sign_bits_py_matches_column_form(spark):
         assert simsearch.sign_bits_py(list(r["v"]), 16, 4) == r["sig"]
 
 
-def test_simhash_kernel_and_relational_agree_on_pairs(spark):
-    # signature VALUES differ (SipHash vs xxhash64) but the pair
-    # semantics must not: identical docs collide at hamming 0 in both
+def test_simhash_identical_docs_pair_at_hamming_zero(spark):
     docs = _corpus(spark)
-    for use_kernel in (True, False):
-        out = dedup.simhash_near_duplicates(
-            docs, max_hamming=3, use_kernel=use_kernel
-        ).collect()
-        ham = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in out}
-        assert ham[(1, 2)] == 0, f"use_kernel={use_kernel}"
+    out = dedup.simhash_near_duplicates(docs, max_hamming=3).collect()
+    ham = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in out}
+    assert ham[(1, 2)] == 0
 
 
 def test_simhash_hot_bucket_join_input_is_bounded(spark):
@@ -439,13 +502,12 @@ def test_simhash_batch_fold_paths_match_reference():
             assert (g is pd.NA and w is None) or g == w, (g, w)
 
 
-def test_simhash_kernel_contract_matches_relational(spark):
-    # empty / whitespace / null docs yield no signature row in either form
+def test_simhash_signatures_skip_empty_docs(spark):
+    # empty / whitespace / null docs yield no signature row
     rows = [(1, ""), (2, "   "), (3, None), (4, "actual words here")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    for fn in (dedup.simhash_signatures_kernel, dedup.simhash_signatures):
-        got = sorted(r["doc_id"] for r in fn(docs).collect())
-        assert got == [4], fn.__name__
+    got = sorted(r["doc_id"] for r in dedup.simhash_signatures_kernel(docs).collect())
+    assert got == [4]
 
 
 def _emb_table(spark, sf="/root/testdata/sf0.001"):

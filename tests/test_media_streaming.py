@@ -144,6 +144,9 @@ def test_streaming_extraction_matches_batch(spark, tmp_path):
 
     stream = incremental.stream_extraction(spark, in_dir, rep, max_files_per_trigger=2)
     assert stream.isStreaming
+    # streaming runs the batch job's Arrow pass 2, not a pandas copy
+    plan = stream._jdf.queryExecution().analyzed().toString()
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
     incremental.run_stream_to_parquet(stream, out_dir, ckpt)
 
     got = {r["doc_id"]: r["spans"] for r in spark.read.parquet(out_dir).collect()}
