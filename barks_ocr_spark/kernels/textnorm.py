@@ -156,7 +156,8 @@ def auto_correct(s: pd.Series) -> pd.Series:
 # whose non-space edge whitespace strips away to a rejected word. The
 # token boundary is a literal space (the reference splits on " "), the
 # inner [\t\n\r\f\v]* mirrors str.strip() on the token, IGNORECASE
-# mirrors .upper(). Parity with the per-token Python form is pinned by
+# mirrors .upper(). Parity with the per-token Python form
+# (tests/reference_forms.py) is pinned by
 # test_property_kernels.py::test_rejected_token_regex_parity.
 _REJECTED_TOKEN_RE = re.compile(
     r"(?:^| )[\t\n\r\f\v]*(?:"
@@ -174,17 +175,6 @@ def has_rejected_token(s: pd.Series) -> pd.Series:
     the rejected list. One C-level regex scan, no per-row Python.
     """
     return s.fillna("").str.contains(_REJECTED_TOKEN_RE.pattern, regex=True, case=False)
-
-
-def has_rejected_token_py(s: pd.Series) -> pd.Series:
-    """Reference-literal per-token implementation (parity oracle for the
-    vectorized regex; not used in the hot path)."""
-    rejected = REJECTED_WORDS
-
-    def _any_rejected(t: str) -> bool:
-        return any(w.upper().strip() in rejected for w in t.split(" ") if w)
-
-    return s.fillna("").map(_any_rejected)
 
 
 def spell_suggest(s: pd.Series, dictionary: frozenset[str]) -> pd.Series:

@@ -5,17 +5,23 @@ Scale notes (the whole point of each design):
 
 - Exact: one hash-aggregate shuffle on the md5 fingerprint. At 100 TB the
   shuffle rows are (32-byte key, doc_id) — minimal.
-- N-gram Jaccard: never O(n²). Shingles are exploded to an inverted index
-  and candidate pairs come from a self-join *on shingle* — only docs
-  sharing ≥1 shingle ever meet, and hot shingles can be capped. The
-  Jaccard is then exact via |A∩B| / (|A|+|B|-|A∩B|).
-- MinHash+LSH: k seeded xxhash64 min-hashes per doc, banded into b bands;
-  candidates = docs sharing a (band, band_signature) bucket. The only
-  shuffle is on the band key. The k hashes are one `aggregate` over the
-  shingle array — no UDF.
+- Near-dup pairs (Jaccard, MinHash, SimHash) are generated over DISTINCT
+  keys — distinct texts for Jaccard and MinHash, distinct signatures
+  for SimHash — and re-expanded to doc pairs at the end, so k copies of
+  a document cost one key, not k (see :func:`_distinct_texts`,
+  :func:`_expand_key_pairs`, :func:`_same_key_pairs`).
+- N-gram Jaccard: never O(n²). Candidate set pairs come from
+  AllPairs/PPJoin prefix postings (hot shingles capped), pass a
+  set-bitmap prefilter inside the pair-generation task, and are then
+  verified exactly via |A∩B| / (|A|+|B|-|A∩B|).
+- MinHash+LSH: k min-hashes per distinct set, folded by one partial
+  aggregate over two seeded xxhash64 values per shingle, banded into b
+  bands; candidates = sets sharing a (band, band hash) bucket. Candidates
+  are verified exactly.
 - SimHash: 64-bit signature from per-token hash bit votes, folded per
   Arrow batch in numpy; near-dups share all but ≤ hamming_budget bits.
-  Bucketing on rotated prefixes makes it shuffle-bounded.
+  Pigeonhole bucketing on (budget+1) signature segments makes it
+  shuffle-bounded.
 - Embedding cosine: exact top-threshold pairs via block-nested join only
   within LSH buckets (see simsearch.py for the bucketing).
 """
@@ -26,8 +32,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from barks_ocr_spark.operators.cacheutil import materialize
 from barks_ocr_spark.operators.cacheutil import persist_tracked as _persist
-from barks_ocr_spark.operators.textstats import canonical_text
+from barks_ocr_spark.operators.textstats import canonical_text, fingerprint
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -35,9 +42,8 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     The hash-groupBy exact-dedup: only groups with >1 member survive.
     """
-    fp = F.md5(canonical_text(F.col(text_col)))
     return (
-        docs.select(fp.alias("fp"), "doc_id")
+        fingerprint(docs, text_col)
         .groupBy("fp")
         .agg(
             F.count("*").alias("n_docs"),
@@ -72,47 +78,106 @@ def shingles_from_text(text: Column, n: int = 3) -> Column:
     return F.coalesce(grams, F.array().cast("array<string>"))
 
 
-def doc_shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
-    """(doc_id, shingles:array<string>) — one regex pass per row, no
-    cache barrier needed (the single-expression path has no
-    sub-expression for projection collapse to duplicate; callers persist
-    the RESULT when it feeds both sides of a self-join)."""
-    return docs.select(
-        "doc_id", shingles_from_text(F.col(text_col), n).alias("shingles")
-    ).filter(F.size("shingles") > 0)
-
-
-def shingles_col(text: Column, n: int = 3) -> Column:
-    """Single-expression shingle column (alias of shingles_from_text)."""
-    return shingles_from_text(text, n)
-
-
-def shingle_table(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
-    """(doc_id, shingle, n_shingles) exploded inverted-index rows."""
-    with_sh = doc_shingles(docs, text_col, n)
-    return with_sh.select(
-        "doc_id",
-        F.size("shingles").alias("n_shingles"),
-        F.explode("shingles").alias("shingle"),
-    )
-
-
 DEFAULT_MAX_SHINGLE_FREQ = 1000
 
 
-def hot_shingles(
-    docs: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    max_shingle_freq: int = DEFAULT_MAX_SHINGLE_FREQ,
+def _distinct_texts(
+    docs: DataFrame, text_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """(members, utexts) for the distinct-text collapse of Jaccard and
+    MinHash: ``members`` is (doc_id, _set), ``utexts`` one row per
+    DISTINCT text, (_set, _n_docs, _text).
+
+    Collapsing by text fingerprint BEFORE the shingle/hash pipeline (for
+    MinHash 2.45 s of ~5 s at sf1.0) runs it once per distinct text, not
+    once per doc (the exact_duplicates shuffle shape — a corpus-keyed
+    exchange a dedup operator pays by definition). Texts with identical
+    shingle SETS form two keys and surface as cross pairs at jaccard 1.0
+    — output unchanged, the key partition is merely finer.
+
+    ``_set`` is a 128-bit identity (two independent xxhash64 passes in
+    one struct): a single 64-bit id carries a BIRTHDAY bound over the
+    corpus — at 10¹¹ distinct texts, (10¹¹)²/2⁶⁵ ≈ hundreds of silent
+    merges, each a false duplicate pair; two hashes push that to 2⁻¹²⁹.
+    The struct rides groupBys, joins and the a<b ordering unchanged."""
+    fpr = docs.select("doc_id", F.col(text_col).alias("_text")).withColumn(
+        "_set",
+        F.struct(
+            F.xxhash64("_text").alias("_s1"),
+            F.xxhash64(F.lit(1), F.col("_text")).alias("_s2"),
+        ),
+    )
+    members = fpr.select("doc_id", "_set")
+    utexts = fpr.groupBy("_set").agg(
+        F.count("*").alias("_n_docs"), F.first("_text").alias("_text")
+    )
+    return members, utexts
+
+
+def _expand_key_pairs(
+    key_pairs: DataFrame, members: DataFrame, key: str, score: str
 ) -> DataFrame:
-    """(shingle, freq) rows the default cap would drop — the audit view
-    for 'log what was dropped' (count() it before a production run)."""
-    sh = shingle_table(docs, text_col, n)
+    """(doc_a < doc_b, score) doc pairs from (_ka, _kb, score) pairs of
+    DISTINCT keys: every member doc of ``_ka`` pairs with every member
+    doc of ``_kb``. ``members`` is (doc_id, key)."""
+    ma = members.select(F.col("doc_id").alias("_da"), F.col(key).alias("_ka"))
+    mb = members.select(F.col("doc_id").alias("_db"), F.col(key).alias("_kb"))
     return (
-        sh.groupBy("shingle")
-        .agg(F.count("*").alias("freq"))
-        .filter(F.col("freq") > max_shingle_freq)
+        key_pairs.join(ma, "_ka")
+        .join(mb, "_kb")
+        .select(
+            F.least("_da", "_db").alias("doc_a"),
+            F.greatest("_da", "_db").alias("doc_b"),
+            score,
+        )
+    )
+
+
+def _verified_key_pairs(
+    cand: DataFrame, sets: DataFrame, arr: str, n: Column, threshold: float
+) -> DataFrame:
+    """(_ka, _kb, jaccard) for the candidate key pairs (_ka, _kb) whose
+    exact jaccard |A∩B| / (n_a + n_b − |A∩B|) reaches ``threshold``: A
+    and B are the ``arr`` arrays of ``sets`` (keyed by _set), n their
+    set sizes. Two key-keyed joins + an intra-row ``array_intersect`` —
+    shuffle volume is O(candidates)."""
+    a = sets.select(
+        F.col("_set").alias("_ka"), n.alias("_na"), F.col(arr).alias("_aa")
+    )
+    b = sets.select(
+        F.col("_set").alias("_kb"), n.alias("_nb"), F.col(arr).alias("_ab")
+    )
+    common = F.size(F.array_intersect("_aa", "_ab"))
+    jac = common / (F.col("_na") + F.col("_nb") - common)
+    return (
+        cand.join(a, "_ka")
+        .join(b, "_kb")
+        .select("_ka", "_kb", jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _same_key_pairs(
+    members: DataFrame, keys: list[str], *score: Column
+) -> DataFrame:
+    """(doc_a < doc_b, *score) doc pairs WITHIN each key group of
+    ``members`` (doc_id plus the ``keys`` columns), from ONE exchange:
+    collect the ids per key, then generate ordered pairs in-task by a
+    double explode — no key-keyed self-join exchanging ``members``
+    twice. Quadratic only in group size, where the OUTPUT is genuinely
+    quadratic (those pairs are the answer). ``score`` may read the
+    ``keys`` columns. A doc_id listed twice in one group pairs with the
+    group's other ids twice, as a self-join would."""
+    groups = (
+        members.groupBy(*keys)
+        .agg(F.collect_list("doc_id").alias("_ids"))
+        .filter(F.size("_ids") > 1)
+    )
+    return (
+        groups.select(F.explode("_ids").alias("doc_a"), "_ids", *keys)
+        .select("doc_a", F.explode("_ids").alias("doc_b"), *keys)
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b", *score)
     )
 
 
@@ -158,8 +223,7 @@ def ngram_jaccard_pairs(
     jaccard stays exact for pairs whose shared shingles are all under
     the cap (denominators use the PRE-cap shingle counts); pairs held
     together only by boilerplate shingles are deliberately dropped —
-    audit what the cap removes via :func:`hot_shingles`, or pass
-    ``max_shingle_freq=None`` for the exact-but-skew-prone plan.
+    pass ``max_shingle_freq=None`` for the exact-but-skew-prone plan.
 
     Plan shape (r7, guide §2.3/§2.4/§8). Three ideas compose:
 
@@ -168,13 +232,14 @@ def ngram_jaccard_pairs(
        collapse. Jaccard is a pure function of the two shingle sets, so
        docs with byte-identical sets (exact duplicates — the common
        case in the corpus this operator exists for) are interchangeable:
-       the quadratic pair stream runs over the DISTINCT sets (set id =
-       xxhash64 of the doc's sorted shingle-hash array), and doc pairs
+       the quadratic pair stream runs over the DISTINCT texts (set id =
+       128-bit text fingerprint, :func:`_distinct_texts`), and doc pairs
        re-expand afterward by joining set members back. k copies of a
        document contribute ONE row per posting list instead of k —
        the pair stream shrinks by the duplication factor SQUARED.
        Same-set doc pairs don't need pair counting at all: their
-       jaccard is |capped set| / (2n − |capped set|), computed per set.
+       jaccard is |capped set| / (2n − |capped set|), computed per set,
+       and the pairs come from :func:`_same_key_pairs`.
     2. **Prefix-filtered candidates, exact array verify** (AllPairs /
        PPJoin prefix filtering on the free hash-ascending order): a
        pair reaching the threshold must share its globally-smallest
@@ -185,10 +250,8 @@ def ngram_jaccard_pairs(
        by a double explode, then candidates verified exactly with
        ``array_intersect`` on the capped arrays. 8-byte xxhash64 keys
        instead of ~25-byte shingle text (same keying discipline, and
-       the same ~n²/2⁶⁴ collision odds, as remove_repeated_chunks; a
-       set-id collision could merge two distinct sets — ~|sets|²/2⁶⁴ —
-       and the DuckDB oracle, which keys on text, agrees at every test
-       scale).
+       the same ~n²/2⁶⁴ collision odds, as remove_repeated_chunks; the
+       DuckDB oracle, which keys on text, agrees at every test scale).
     3. **Size-ratio prune** — jaccard ≤ min(n_a,n_b)/max(n_a,n_b), and
        double division is monotone, so dropping set pairs with
        min/max < threshold before the candidate distinct loses no
@@ -203,41 +266,13 @@ def ngram_jaccard_pairs(
     prefix-filter step, byte-identical output (oracle-checked at
     sf0.001, sf0.01, sf0.1, sf1.0).
     """
-    # r7b: collapse by TEXT fingerprint BEFORE the shingle/hash kernel
-    # (same move as minhash_near_duplicates): the canonicalize + regex +
-    # in-array hashing pipeline was the dominant stage and ran once per
-    # DOC; grouping by a 128-bit text fingerprint first (the
-    # exact_duplicates shuffle shape — a corpus-keyed exchange a dedup
-    # operator pays by definition) runs it once per DISTINCT text, and
-    # the old doc-level persisted table + set-keyed first(_harr)
-    # aggregate both disappear. Two texts with identical shingle SETS
-    # now form two internal "sets" and surface as cross pairs at
-    # jaccard 1.0 — output unchanged, the set partition is merely finer.
-    #
-    # 128-bit set identity (two independent xxhash64 passes in one
-    # struct): a single 64-bit id carries a BIRTHDAY bound over the
-    # corpus — at 10¹¹ distinct sets, (10¹¹)²/2⁶⁵ ≈ hundreds of silent
-    # set-merges, each a false duplicate pair — unlike the per-pair
-    # probe/posting collisions discussed above, which stay vanishing.
-    # The struct rides groupBys, joins, and the a<b ordering unchanged.
-    fpr = docs.select("doc_id", F.col(text_col).alias("_text")).withColumn(
-        "_set",
-        F.struct(
-            F.xxhash64("_text").alias("_s1"),
-            F.xxhash64(F.lit(1), F.col("_text")).alias("_s2"),
-        ),
-    )
-    members = fpr.select("doc_id", "_set")
-    utexts = fpr.groupBy("_set").agg(
-        F.count("*").alias("_n_docs"), F.first("_text").alias("_text")
-    )
+    members, utexts = _distinct_texts(docs, text_col)
     sh = shingles_from_text(F.col("_text"), n)
     harr = F.sort_array(F.transform(sh, lambda x: F.xxhash64(x)))
     # one row per DISTINCT text, with its doc multiplicity and the
-    # sorted shingle-hash array — eagerly materialized: the hot list
-    # below feeds a BROADCAST build side, which recomputes a lazily
-    # persisted input instead of reading the cache
-    usets = _persist(
+    # sorted shingle-hash array — materialized: the hot list below feeds
+    # a broadcast build side
+    usets = materialize(
         utexts.filter(F.size(sh) > 0).select(
             "_set",
             "_n_docs",
@@ -245,7 +280,6 @@ def ngram_jaccard_pairs(
             harr.alias("_harr"),
         )
     )
-    usets.count()
     # capped per-set arrays + 1024-bit set bitmaps, from ONE set-keyed
     # regroup of the exploded postings: the hot list (true per-DOC
     # frequency) is removed by the same broadcast anti-join as before,
@@ -314,13 +348,8 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    m1 = members.select(F.col("doc_id").alias("doc_a"), "_set")
-    m2 = members.select(F.col("doc_id").alias("doc_b"), "_set")
-    same = (
-        same_sets.join(m1, "_set")
-        .join(m2, "_set")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "jaccard")
+    same = _same_key_pairs(
+        members.join(same_sets, "_set"), ["_set", "jaccard"], F.col("jaccard")
     )
     # Cross-set pairs by PREFIX FILTERING (AllPairs/PPJoin, on the free
     # hash-ascending order): a pair reaching jaccard ≥ t shares
@@ -403,53 +432,27 @@ def ngram_jaccard_pairs(
             F.least(n_x, n_y) / F.greatest(n_x, n_y) >= F.lit(threshold)
         )
         .filter(ub >= c_min)
-        .select(x["_set"].alias("_sa"), y["_set"].alias("_sb"))
+        .select(x["_set"].alias("_ka"), y["_set"].alias("_kb"))
         .distinct()
     )
-    ca = uc.select(
-        F.col("_set").alias("_sa"),
-        F.col("n_shingles").alias("n_a"),
-        F.col("_carr").alias("_ca"),
+    set_pairs = _verified_key_pairs(
+        surv, uc, "_carr", F.col("n_shingles"), threshold
     )
-    cb = uc.select(
-        F.col("_set").alias("_sb"),
-        F.col("n_shingles").alias("n_b"),
-        F.col("_carr").alias("_cb"),
-    )
-    n_common = F.size(F.array_intersect("_ca", "_cb"))
-    jac = n_common / (F.col("n_a") + F.col("n_b") - n_common)
-    set_pairs = (
-        surv.join(ca, "_sa")
-        .join(cb, "_sb")
-        .select("_sa", "_sb", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-    ma = members.select(F.col("doc_id").alias("_da"), F.col("_set").alias("_sa"))
-    mb = members.select(F.col("doc_id").alias("_db"), F.col("_set").alias("_sb"))
-    cross = (
-        set_pairs.join(ma, "_sa")
-        .join(mb, "_sb")
-        .select(
-            F.least("_da", "_db").alias("doc_a"),
-            F.greatest("_da", "_db").alias("doc_b"),
-            "jaccard",
-        )
-    )
+    cross = _expand_key_pairs(set_pairs, members, "_set", "jaccard")
     return cross.unionAll(same)
 
 
-def minhash_signatures_from_shingles(sh: DataFrame, k: int = 64) -> DataFrame:
+def _minhash_sigs_from_h1h2(hashed: DataFrame, k: int) -> DataFrame:
     """(doc_id, sig: array<bigint>[k]) MinHash signatures, all JVM-side,
-    from an existing (doc_id, shingle) table — lets callers share one
-    shingle pass across signature and verification stages.
+    from pre-hashed (doc_id, _h1, _h2) rows, one row per shingle.
 
-    Shape: hash each shingle row, then ``groupBy(doc_id).agg(min(h_0),
-    …, min(h_{k-1}))`` — partial (map-side) aggregation makes the
-    shuffle k longs per doc. The tempting alternative — nested
-    ``transform(seeds, array_min(transform(...)))`` over a shingles
-    column — is catastrophically slower: Catalyst's projection collapse
-    inlines the whole canonicalize/split/distinct pipeline into every
-    seed lambda (measured ~20× slower on 1k docs).
+    Shape: ``groupBy(doc_id).agg(min(h_0), …, min(h_{k-1}))`` — partial
+    (map-side) aggregation makes the shuffle k longs per key. The
+    tempting alternative — nested ``transform(seeds,
+    array_min(transform(...)))`` over a shingles column — is
+    catastrophically slower: Catalyst's projection collapse inlines the
+    whole canonicalize/split/distinct pipeline into every seed lambda
+    (measured ~20× slower on 1k docs).
 
     Hash family: two xxhash64 seeds combined per slot as
     h_i = h1 XOR rotl(h2, i) — 2 string hashes per shingle row instead
@@ -459,21 +462,11 @@ def minhash_signatures_from_shingles(sh: DataFrame, k: int = 64) -> DataFrame:
     *verified* output pairs (exact Jaccard), so the hash family is an
     internal choice, not part of the public contract.
 
-    The two hashes are MATERIALIZED as columns through a projection
-    before the aggregate: whole-stage codegen does NOT subexpression-
-    eliminate across aggregate-function children, so inlining h1/h2 into
-    the k min() exprs re-hashes the shingle string 2k times per row
-    (measured 4.1s vs 1.6s at sf0.1 for the signature stage)."""
-    hashed = sh.select(
-        "doc_id",
-        F.xxhash64(F.col("shingle")).alias("_h1"),
-        F.xxhash64(F.col("shingle"), F.lit(1)).alias("_h2"),
-    )
-    return _minhash_sigs_from_h1h2(hashed, k)
-
-
-def _minhash_sigs_from_h1h2(hashed: DataFrame, k: int) -> DataFrame:
-    """Signature aggregate over pre-hashed (doc_id, _h1, _h2) rows."""
+    The two hashes must arrive MATERIALIZED as columns, as they do here:
+    whole-stage codegen does NOT subexpression-eliminate across
+    aggregate-function children, so inlining h1/h2 into the k min()
+    exprs re-hashes the shingle string 2k times per row (measured 4.1 s
+    vs 1.6 s at sf0.1 for the signature stage)."""
     h1, h2 = F.col("_h1"), F.col("_h2")
 
     def rotl(col, i):  # Java shifts are mod 64, so i=0 degenerates to col
@@ -506,15 +499,11 @@ def minhash_lsh_candidates(
     ngram_jaccard_pairs). Measured at sf1.0: candidate stage 6.0 s →
     5.1 s best-of-2, identical candidate sets.
     """
-    # Persist AND eagerly materialize: a lazily-materialized cache
-    # inside the same action still recomputes on the broadcast-build
-    # side (measured 280s lazy vs 2s eager on 1k docs). Band structs
-    # are UNROLLED literal expressions (one concrete slice+hash per
-    # band, whole-stage codegen) rather than a transform() lambda,
-    # which evaluates per element through the interpreted HOF path —
-    # the same shape simhash_segment_table uses.
-    signatures = _persist(signatures)
-    signatures.count()
+    # Band structs are UNROLLED literal expressions (one concrete
+    # slice+hash per band, whole-stage codegen) rather than a transform()
+    # lambda, which evaluates per element through the interpreted HOF
+    # path — the same shape simhash_segment_table uses.
+    signatures = materialize(signatures)
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),
@@ -527,18 +516,7 @@ def minhash_lsh_candidates(
     banded = signatures.select(
         "doc_id", F.explode(F.array(*band_structs)).alias("bb")
     ).select("doc_id", "bb.band", "bb.bucket")
-    grouped = (
-        banded.groupBy("band", "bucket")
-        .agg(F.collect_list("doc_id").alias("_ids"))
-        .filter(F.size("_ids") > 1)
-    )
-    return (
-        grouped.select(F.explode("_ids").alias("doc_a"), "_ids")
-        .select("doc_a", F.explode("_ids").alias("doc_b"))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    return _same_key_pairs(banded, ["band", "bucket"]).distinct()
 
 
 def minhash_near_duplicates(
@@ -556,10 +534,10 @@ def minhash_near_duplicates(
     Scale shape (r7): the whole MinHash pipeline — signatures, banding,
     candidate generation, exact verify — runs over the DISTINCT shingle
     sets (the same collapse as ngram_jaccard_pairs and simhash's
-    distinct-signature discipline): a doc's set identity is a pure
-    projection (hash of its sorted shingle-hash-pair array), duplicated
-    docs contribute ONE signature and band row each, and doc pairs
-    re-expand at the end. Same-set doc pairs skip LSH+verify entirely —
+    distinct-signature discipline): a doc's set identity is its 128-bit
+    text fingerprint (:func:`_distinct_texts`), duplicated docs
+    contribute ONE signature and band row each, and doc pairs re-expand
+    at the end. Same-set doc pairs skip LSH+verify entirely —
     identical sets always share every band and verify at jaccard 1.0,
     so they are emitted directly. Both (h1, h2) seeded hashes ride the
     per-doc struct array, so SIGNATURE VALUES ARE UNCHANGED from the
@@ -576,34 +554,7 @@ def minhash_near_duplicates(
     they save. Exploding the in-array-built struct-of-hashes skips the
     per-row UTF8 copies of exploding shingle strings — the same
     measured 4.7× stream win as decontam's gram explode.)"""
-    # r7b: collapse by TEXT fingerprint BEFORE the shingle/hash kernel —
-    # the shingle regex + double-hash transform + fat-struct-array
-    # persist was the dominant stage (2.45 s of ~5 s at sf1.0), and on
-    # a duplicated corpus it ran once per DOC; the groupBy(first(text))
-    # collapse runs it once per DISTINCT text (the exact_duplicates
-    # shuffle shape — a corpus-keyed exchange a dedup operator pays by
-    # definition), and the separate set-keyed usets aggregate of struct
-    # arrays disappears. Two texts with identical shingle SETS now form
-    # two "sets" and are found as cross pairs at jaccard 1.0 — the
-    # output is unchanged, only the internal set partition is finer.
-    #
-    # 128-bit set identity struct — same birthday-bound reasoning as
-    # ngram_jaccard_pairs: a 64-bit id silently merges ~(sets)²/2⁶⁵
-    # distinct sets corpus-wide; two independent hashes push that to
-    # 2⁻¹²⁹. The struct flows through the signature groupBy, band
-    # collect lists, ordered pair comparison, and expansion joins
-    # unchanged.
-    fpr = docs.select("doc_id", F.col(text_col).alias("_text")).withColumn(
-        "_set",
-        F.struct(
-            F.xxhash64("_text").alias("_s1"),
-            F.xxhash64(F.lit(1), F.col("_text")).alias("_s2"),
-        ),
-    )
-    members = fpr.select("doc_id", "_set")
-    utexts = fpr.groupBy("_set").agg(
-        F.count("*").alias("_n_docs"), F.first("_text").alias("_text")
-    )
+    members, utexts = _distinct_texts(docs, text_col)
     sh = shingles_from_text(F.col("_text"), n)
     ha = F.sort_array(
         F.transform(
@@ -621,52 +572,18 @@ def minhash_near_duplicates(
         F.col("_set").alias("doc_id"), F.explode("_ha").alias("_hh")
     ).select("doc_id", "_hh._h1", "_hh._h2")
     sigs = _minhash_sigs_from_h1h2(hashed, k)
-    cand = minhash_lsh_candidates(sigs, bands, k // bands)
-    a = usets.select(F.col("_set").alias("doc_a"), F.col("_ha").alias("sh_a"))
-    b = usets.select(F.col("_set").alias("doc_b"), F.col("_ha").alias("sh_b"))
-    pairs = cand.join(a, "doc_a").join(b, "doc_b")
-    pairs = pairs.select(
-        F.col("doc_a").alias("_sa"),
-        F.col("doc_b").alias("_sb"),
-        F.size(F.array_intersect("sh_a", "sh_b")).alias("n_common"),
-        F.size("sh_a").alias("n_a"),
-        F.size("sh_b").alias("n_b"),
+    cand = minhash_lsh_candidates(sigs, bands, k // bands).select(
+        F.col("doc_a").alias("_ka"), F.col("doc_b").alias("_kb")
     )
-    jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    set_pairs = pairs.select("_sa", "_sb", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
-    )
-    ma = members.select(F.col("doc_id").alias("_da"), F.col("_set").alias("_sa"))
-    mb = members.select(F.col("doc_id").alias("_db"), F.col("_set").alias("_sb"))
-    cross = (
-        set_pairs.join(ma, "_sa")
-        .join(mb, "_sb")
-        .select(
-            F.least("_da", "_db").alias("doc_a"),
-            F.greatest("_da", "_db").alias("doc_b"),
-            "jaccard",
-        )
-    )
+    set_pairs = _verified_key_pairs(cand, usets, "_ha", F.size("_ha"), threshold)
+    cross = _expand_key_pairs(set_pairs, members, "_set", "jaccard")
     # same-set doc pairs: identical sets collide in every band and
     # verify at exactly 1.0 — emit directly (threshold ≤ 1 keeps them,
     # matching the doc-level plan's behavior)
     dup_sets = usets.filter(F.col("_n_docs") > 1).select("_set")
-    sig_groups = (
-        members.join(dup_sets, "_set")
-        .groupBy("_set")
-        .agg(F.collect_list("doc_id").alias("_ids"))
-    )
-    same = (
-        sig_groups.select(F.explode("_ids").alias("doc_a"), "_ids")
-        .select("doc_a", F.explode("_ids").alias("doc_b"))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.lit(1.0).alias("jaccard"),
-        )
-        .filter(F.lit(1.0) >= F.lit(threshold))
-    )
+    same = _same_key_pairs(
+        members.join(dup_sets, "_set"), ["_set"], F.lit(1.0).alias("jaccard")
+    ).filter(F.lit(1.0) >= F.lit(threshold))
     return cross.unionAll(same)
 
 
@@ -700,7 +617,7 @@ def simhash_signatures_kernel(
     )
 
 
-def _simhash_batch(texts):  # type: (pd.Series) -> pd.Series
+def _simhash_batch(texts: pd.Series) -> pd.Series:
     import re
 
     import numpy as np
@@ -801,11 +718,6 @@ def _simhash_batch(texts):  # type: (pd.Series) -> pd.Series
     )
 
 
-# The kernel needs a real type hint for pandas_udf inference; assign it
-# here so the function body above stays readable.
-_simhash_batch.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-
-
 def simhash_segment_table(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """(simhash, seg, val) pigeonhole rows for a signature column: the
     64-bit sig split into (max_hamming+1) segments — any pair within the
@@ -868,9 +780,9 @@ def simhash_near_duplicates(
 
     - cross-signature pairs inherit their sigs' hamming distance and are
       output-proportional by construction (each surviving sig pair);
-    - same-signature pairs (hamming 0) come from a members self-join on
-      simhash — quadratic only in group size where the OUTPUT is
-      genuinely quadratic (those pairs are the answer).
+    - same-signature pairs (hamming 0) come from the members grouped by
+      simhash (:func:`_same_key_pairs`) — quadratic only in group size
+      where the OUTPUT is genuinely quadratic (those pairs are the answer).
 
     ``max_bucket_size`` optionally drops (seg, val) buckets holding more
     distinct signatures than the cap before the join — OFF by default
@@ -882,11 +794,9 @@ def simhash_near_duplicates(
     Signatures come from the zero-shuffle kernel
     :func:`simhash_signatures_kernel`.
     """
-    sigs = _persist(simhash_signatures_kernel(docs, text_col))
-    sigs.count()
+    sigs = materialize(simhash_signatures_kernel(docs, text_col))
     usig = sigs.select("simhash").distinct()
-    exploded = _persist(simhash_segment_table(usig, max_hamming))
-    exploded.count()
+    exploded = materialize(simhash_segment_table(usig, max_hamming))
     if max_bucket_size is not None:
         hot = (
             exploded.groupBy("seg", "val")
@@ -895,43 +805,19 @@ def simhash_near_duplicates(
             .select("seg", "val")
         )
         exploded = exploded.join(F.broadcast(hot), ["seg", "val"], "left_anti")
-    sa = exploded.select(F.col("simhash").alias("sig_a"), "seg", "val")
-    sb = exploded.select(F.col("simhash").alias("sig_b"), "seg", "val")
-    ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
+    sa = exploded.select(F.col("simhash").alias("_ka"), "seg", "val")
+    sb = exploded.select(F.col("simhash").alias("_kb"), "seg", "val")
+    ham = F.bit_count(F.col("_ka").bitwiseXOR(F.col("_kb")))
     sig_pairs = (
         sa.join(sb, ["seg", "val"])
-        .filter(F.col("sig_a") < F.col("sig_b"))
-        .select("sig_a", "sig_b")
+        .filter(F.col("_ka") < F.col("_kb"))
+        .select("_ka", "_kb")
         .filter(ham <= max_hamming)
         .distinct()
-        .select("sig_a", "sig_b", ham.alias("hamming"))
+        .select("_ka", "_kb", ham.alias("hamming"))
     )
-    mem_a = sigs.select(F.col("doc_id").alias("_da"), F.col("simhash").alias("sig_a"))
-    mem_b = sigs.select(F.col("doc_id").alias("_db"), F.col("simhash").alias("sig_b"))
-    cross = (
-        sig_pairs.join(mem_a, "sig_a")
-        .join(mem_b, "sig_b")
-        .select(
-            F.least("_da", "_db").alias("doc_a"),
-            F.greatest("_da", "_db").alias("doc_b"),
-            "hamming",
-        )
-    )
-    # same-signature pairs from ONE exchange (groupBy/collect postings
-    # + in-task ordered pair explode — r7, the ngram_jaccard_pairs
-    # shape) instead of a signature-keyed self-join that exchanged the
-    # sigs table twice
-    sig_groups = (
-        sigs.groupBy("simhash")
-        .agg(F.collect_list("doc_id").alias("_ids"))
-        .filter(F.size("_ids") > 1)
-    )
-    same = (
-        sig_groups.select(F.explode("_ids").alias("doc_a"), "_ids")
-        .select("doc_a", F.explode("_ids").alias("doc_b"))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.lit(0).alias("hamming"))
-    )
+    cross = _expand_key_pairs(sig_pairs, sigs, "simhash", "hamming")
+    same = _same_key_pairs(sigs, ["simhash"], F.lit(0).alias("hamming"))
     return cross.unionAll(same)
 
 
@@ -1076,16 +962,11 @@ def dedup_increment(
 
     from barks_ocr_spark.sources import bucketed
 
-    spark = new_docs.sparkSession
-    table = (
-        index_table
-        if "." in index_table
-        else f"{bucketed.BUCKETED_DB}.{index_table}"
-    )
     fps = new_docs.withColumn(
         "fp", F.md5(canonical_text(F.col(text_col)))
     )
-    alive = fps.join(spark.table(table), "fp", "left_anti")
+    index = bucketed.read_table(new_docs.sparkSession, index_table)
+    alive = fps.join(index, "fp", "left_anti")
     w = Window.partitionBy("fp").orderBy(
         F.md5(F.col(id_col).cast("string")), F.col(id_col)
     )
@@ -1109,7 +990,6 @@ def fingerprint_index_append(
     SURVIVORS of :func:`dedup_increment` after each batch commits."""
     from barks_ocr_spark.sources import bucketed
 
-    spark = docs.sparkSession
     qualified = (
         table if "." in table else f"{bucketed.BUCKETED_DB}.{table}"
     )

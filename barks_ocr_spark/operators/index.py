@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from barks_ocr_spark.kernels import textnorm as tn
+from barks_ocr_spark.operators.cacheutil import materialize, persist_tracked
 
 # Exact Spark translation of the reference tokenizer
 # (make-word-index-from-gemini-ai-groups.py:251-265): lowercase; fold
@@ -70,8 +71,6 @@ def tf_idf(docs: DataFrame, text_col: str = "text") -> DataFrame:
     never reshuffles; N is a driver scalar from one distributed count,
     folded in as a literal. ln() is IEEE-deterministic, so the score is
     exactly reproducible cross-engine (DuckDB oracle)."""
-    from barks_ocr_spark.operators.cacheutil import persist_tracked
-
     idx = persist_tracked(inverted_index(docs, text_col))
     n_docs = docs.count()
     dfreq = (
@@ -106,14 +105,10 @@ def index_hyphen_duplicates(
     shape: runs on the VOCABULARY (distinct words — bounded, never
     corpus-sized), one hash join of the hyphenated slice against the
     vocabulary on the dehyphenated key."""
-    from barks_ocr_spark.operators.cacheutil import persist_tracked
-
-    # the vocabulary stats feed BOTH join sides — aggregate the corpus
-    # once (eager: a lazy cache would recompute under the broadcast)
-    stats = persist_tracked(
+    # the vocabulary stats feed BOTH join sides — aggregate the corpus once
+    stats = materialize(
         index.groupBy("word").agg(F.countDistinct("doc_id").alias("n_docs"))
     )
-    stats.count()
     hyph = stats.filter(F.col("word").contains("-")).select(
         F.col("word").alias("term"),
         F.regexp_replace("word", "-", "").alias("dehyphenated"),
@@ -178,11 +173,8 @@ def search_phrase(pos_index: DataFrame, phrase: str) -> DataFrame:
     if len(terms) > 1:
         # one pass over the index feeds every per-term slice: without
         # this an on-the-fly index re-tokenizes the corpus once per term
-        # (eager count — a lazy cache would recompute per join branch)
-        from barks_ocr_spark.operators.cacheutil import persist_tracked
-
-        pos_index = persist_tracked(pos_index.filter(F.col("word").isin(terms)))
-        pos_index.count()
+        # (eager — a lazy cache would recompute per join branch)
+        pos_index = materialize(pos_index.filter(F.col("word").isin(terms)))
 
     def _shift(i: int):
         # factory, not a default-arg lambda: pyspark inspects lambda

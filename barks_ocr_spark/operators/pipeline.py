@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from barks_ocr_spark.operators import decontam, sampling, textstats
-from barks_ocr_spark.operators.cacheutil import persist_tracked
+from barks_ocr_spark.operators.cacheutil import materialize
 
 
 def clean_corpus(
@@ -129,15 +129,11 @@ def _build(
         .filter("keep")
         .select("doc_id", "text", group_col)
     )
-    scrubbed = persist_tracked(
+    scrubbed = materialize(
         textstats.pii_redact(gated, passthrough=(group_col,)).select(
             "doc_id", F.col("text_redacted").alias("text"), group_col
         )
     )
-    # eager materialization: a lazily-persisted input to a broadcast
-    # build side recomputes instead of reading the cache (README
-    # "Scale design" note)
-    scrubbed.count()
     cleaned = decontam.decontaminate(scrubbed, eval_docs, n=n)
     manifest = sampling.budget_sample(cleaned, group_col, budget_tokens)
     return manifest, {"scrubbed": scrubbed, "cleaned": cleaned}

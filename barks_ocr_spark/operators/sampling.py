@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from barks_ocr_spark.operators.cacheutil import materialize
+
 
 def _rank_key(id_col: str) -> Column:
     """Deterministic pseudo-random ordering key: md5 hex of the id."""
@@ -224,19 +226,16 @@ def budget_sample(
         size_col = F.size(
             F.regexp_extract_all(F.col(text_col), F.lit(BPE_TOKEN_RE), 0)
         )
-    from barks_ocr_spark.operators.cacheutil import persist_tracked
-
     # ``sized`` feeds BOTH the bucket-totals pass and the join-back, and
     # unlike cap_per_group's count pass its first pass cannot be
     # column-pruned (size_col is a regex over the full text), so an
-    # unpersisted plan tokenizes the whole corpus twice — persist +
-    # eager materialize (r7, guide §2.4). The cached table is the
-    # text-free manifest (id, group, n_tokens, 32-hex rank): strictly
-    # smaller than the input, the same stage-checkpoint discipline as
+    # unpersisted plan tokenizes the whole corpus twice (r7, guide §2.4).
+    # The cached table is the text-free manifest (id, group, n_tokens,
+    # 32-hex rank): strictly smaller than the input, the same stage-checkpoint discipline as
     # pipeline.py's persisted scrub intermediate. Measured at sf1.0:
     # budget_sample 2.04 s → 1.45 s; clean_corpus (whose budget input
     # subtree carries the decontam flag pass) 19.6 s → 16.4 s.
-    sized = persist_tracked(
+    sized = materialize(
         df.select(
             F.col(id_col),
             F.col(group_col),
@@ -244,7 +243,6 @@ def budget_sample(
             _rank_key(id_col).alias("_rk"),
         ).withColumn("_bk", F.substring("_rk", 1, bucket_chars))
     )
-    sized.count()
     bucket_totals = sized.groupBy(group_col, "_bk").agg(
         F.sum("n_tokens").alias("_bk_tokens")
     )

@@ -39,7 +39,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from barks_ocr_spark.operators.cacheutil import persist_tracked as _persist
+from barks_ocr_spark.operators.cacheutil import materialize
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -546,13 +546,12 @@ def cosine_pairs(
     not O(corpus)), so it keeps the dynamic-length HOF form — see the
     module docstring for why the scan paths don't."""
     v = F.col(vec_col).cast("array<double>")
-    with_sig = _persist(  # feeds both self-join sides — compute LSH bits once
+    with_sig = materialize(  # feeds both self-join sides — LSH bits once
         embeddings.select(
             F.col(id_col).alias("vid"), v.alias("v"),
             sign_lsh_bits(v, n_planes, dim).alias("sig"),
         )
     )
-    with_sig.count()  # eager: lazy cache would recompute on broadcast side
     a = with_sig.select(
         F.col("vid").alias("id_a"), F.col("v").alias("v_a"), "sig"
     )

@@ -13,6 +13,7 @@ Cross-engine value-parity rules used throughout:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,9 +31,12 @@ from barks_ocr_spark.operators import (
     skew,
     textstats,
 )
+from barks_ocr_spark.operators.cacheutil import materialize
 
 DEC = "decimal(18,2)"
 DEC6 = "decimal(18,6)"
+# load(spread=True) size gate, see load
+_SPREAD_MIN_BYTES = 4 * 1024 * 1024
 
 
 def load(
@@ -59,8 +63,6 @@ def load(
         # 5.6 MB: word_index 2.0→1.0 s, extract_spans 7.3→1.5 s with
         # it). Production-scale tables pass the gate trivially and are
         # instead excluded by the partition-count check.
-        import os
-
         path = f"{sf_dir}/{name}.parquet"
         size = (
             sum(
@@ -70,11 +72,8 @@ def load(
             if os.path.isdir(path)
             else os.path.getsize(path)
         )
-        min_bytes = int(
-            os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES", 4 * 1024 * 1024)
-        )
         par = spark.sparkContext.defaultParallelism
-        if size >= min_bytes and df.rdd.getNumPartitions() < par:
+        if size >= _SPREAD_MIN_BYTES and df.rdd.getNumPartitions() < par:
             df = df.repartition(par)
     return df
 
@@ -1314,19 +1313,12 @@ def q_simhash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-specific xxhash64 bit votes and are asserted in pytest."""
     docs = _doubled_docs(spark, sf_dir)
     pairs = dedup.simhash_near_duplicates(docs, max_hamming=3)
-    # persist + eager materialize: the fingerprint table feeds BOTH join
-    # sides, so an unpersisted plan scans + canonicalizes + md5s the
-    # doubled corpus twice (r7, guide §2.4 — one pass, two cache reads)
-    from barks_ocr_spark.operators.cacheutil import persist_tracked
-
-    fp = persist_tracked(
-        docs.select(
-            "doc_id", F.md5(textstats.canonical_text(F.col("text"))).alias("f")
-        )
-    )
-    fp.count()
-    a = fp.select(F.col("doc_id").alias("doc_a"), F.col("f").alias("f_a"))
-    b = fp.select(F.col("doc_id").alias("doc_b"), F.col("f").alias("f_b"))
+    # materialized: the fingerprint table feeds BOTH join sides, so an
+    # unpersisted plan scans + canonicalizes + md5s the doubled corpus
+    # twice (r7, guide §2.4 — one pass, two cache reads)
+    fp = materialize(textstats.fingerprint(docs))
+    a = fp.select(F.col("doc_id").alias("doc_a"), F.col("fp").alias("f_a"))
+    b = fp.select(F.col("doc_id").alias("doc_b"), F.col("fp").alias("f_b"))
     return (
         pairs.join(a, "doc_a")
         .join(b, "doc_b")

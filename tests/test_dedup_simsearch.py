@@ -154,6 +154,57 @@ def test_prefix_ceilings_are_exact(spark, thresholds, ns):
             assert r[f"m{i}"] == -(-ta * r["n"] // (ta + tb)), (t, r["n"])
 
 
+def test_near_dup_pairs_identical_across_partition_counts(spark):
+    # Pair generation runs over distinct keys and re-expands to doc
+    # pairs (cross-key joins + in-task same-key explodes); the rows must
+    # not depend on how the keys and members are partitioned. Corpus:
+    # 3 copies of one text, 2 of another, a near-dup of the first,
+    # short, empty and null text.
+    from barks_ocr_spark.operators.cacheutil import unpersist_intermediates
+
+    a = " ".join(f"w{i}" for i in range(20))
+    a_near = " ".join(f"w{i}" for i in range(19)) + " other"
+    b = "spark engines rule the data world every single day"
+    rows = [
+        (1, a), (2, b), (3, a), (4, a_near), (5, b), (6, a),
+        (7, "two words"), (8, ""), (9, None),
+        (10, "completely different text about query engines here"),
+    ]
+    ops = {
+        "jaccard": dedup.ngram_jaccard_pairs,
+        # cap 3: the shingles `a` shares with `a_near` (4 docs) drop, so
+        # the same-set score of `a`'s copies is 1/35, below 1.0
+        "jaccard_capped": lambda d: dedup.ngram_jaccard_pairs(
+            d, threshold=0.02, max_shingle_freq=3
+        ),
+        "minhash": dedup.minhash_near_duplicates,
+        "simhash": dedup.simhash_near_duplicates,
+    }
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    got = {}
+    try:
+        for parts in (1, 7):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            docs = spark.createDataFrame(
+                rows, "doc_id long, text string"
+            ).repartition(parts)
+            for name, op in ops.items():
+                got[name, parts] = sorted(map(tuple, op(docs).collect()))
+            unpersist_intermediates()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    for name in ops:
+        assert got[name, 1] == got[name, 7], name
+    same_a = [(1, 3), (1, 6), (3, 6)]
+    capped = {(r[0], r[1]): r[2] for r in got["jaccard_capped", 1]}
+    assert [capped[p] for p in same_a] == [1 / 35] * 3
+    assert got["jaccard", 1] == sorted(
+        [(p, q, 1.0) for p, q in same_a] + [(2, 5, 1.0)]
+        + [(min(d, 4), max(d, 4), 17 / 19) for d in (1, 3, 6)]
+    )
+    assert {(r[0], r[1]) for r in got["simhash", 1]} >= set(same_a) | {(2, 5)}
+
+
 def test_minhash_finds_planted_dups(spark):
     out = dedup.minhash_near_duplicates(_corpus(spark), threshold=0.8).collect()
     pairs = {(r["doc_a"], r["doc_b"]) for r in out}
@@ -168,7 +219,7 @@ def test_minhash_short_and_null_docs(spark):
     docs = spark.createDataFrame(rows, "doc_id string, text string")
     assert dedup.minhash_near_duplicates(docs).count() == 0
     assert dedup.ngram_jaccard_pairs(docs).count() == 0
-    sh = docs.select(dedup.shingles_col(F.col("text")).alias("s")).collect()
+    sh = docs.select(dedup.shingles_from_text(F.col("text")).alias("s")).collect()
     assert all(r["s"] == [] for r in sh)
 
 

@@ -6,6 +6,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from barks_ocr_spark.operators import decontam, textstats
+from reference_forms import (
+    repetition_scores_batch_loop,
+    repetition_scores_relational,
+)
 
 
 def _docs(spark, rows):
@@ -209,7 +213,7 @@ def test_repetition_kernel_matches_relational(spark):
     docs = _docs(spark, rows)
     a = sorted(map(tuple, textstats.repetition_scores(docs).collect()))
     b = sorted(
-        map(tuple, textstats.repetition_scores_relational(docs).collect())
+        map(tuple, repetition_scores_relational(docs).collect())
     )
     assert a == b
 
@@ -607,5 +611,5 @@ def test_repetition_kernel_vectorized_matches_loop():
     )
     for batch in (edge, rand):
         got = textstats._repetition_scores_batch(batch)
-        want = textstats._repetition_scores_batch_loop(batch)
+        want = repetition_scores_batch_loop(batch)
         pd.testing.assert_frame_equal(got, want)

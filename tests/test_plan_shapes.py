@@ -61,11 +61,9 @@ def test_word_index_aggregates_partially(spark):
 
 
 def test_minhash_signature_agg_is_partial(spark):
-    from barks_ocr_spark.operators import dedup
-
-    docs = Q.load(spark, SF, "documents")
-    sh = dedup.shingle_table(docs).select("doc_id", "shingle")
-    plan = _plan(dedup.minhash_signatures_from_shingles(sh, k=8))
+    # the k-slot signature fold of the registry MinHash query combines
+    # map-side before its shuffle
+    plan = _plan(Q.q_minhash_dups(spark, SF))
     assert "partial_min" in plan
 
 
@@ -96,11 +94,10 @@ def test_repetition_scores_is_zero_shuffle_kernel(spark):
 
 
 def test_repetition_relational_aggregates_partially(spark):
-    # the A/B reference form keeps its map-side combine pin
-    from barks_ocr_spark.operators import textstats
-    from barks_ocr_spark.plans.queries import load
+    # the relational reference form keeps its map-side combine pin
+    from reference_forms import repetition_scores_relational
 
-    df = textstats.repetition_scores_relational(load(spark, SF, "documents"))
+    df = repetition_scores_relational(Q.load(spark, SF, "documents"))
     assert "partial_count" in _plan(df)
 
 
