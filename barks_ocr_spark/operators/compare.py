@@ -19,6 +19,9 @@ ratio ≥ 0.7 at `:39`). Here both engines' outputs are group tables
 
 from __future__ import annotations
 
+import functools
+from difflib import SequenceMatcher
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -27,37 +30,48 @@ from pyspark.sql.window import Window
 
 FUZZY_MATCH_THRESHOLD = 0.7  # tools/ocr_check.py:39
 
-_RATIO_UDF = None
+
+@functools.cache
+def _ratio_udf(threshold: float):
+    """difflib ratio with the standard upper-bound short-circuit: pairs
+    whose real_quick_ratio/quick_ratio (cheap length/bag bounds, both ≥
+    the true ratio) fall below ``threshold`` score -1.0 instead of
+    running the O(len²) matcher. Both bounds are ≥ 0, so a 0.0
+    threshold never prunes and skips computing them.
+
+    The pandas_udf is built lazily: decorating at import time parses the
+    DDL return type, which requires an active SparkContext.
+    """
+
+    def _batch(x: pd.Series, y: pd.Series) -> pd.Series:
+        out = []
+        for p, q in zip(x, y):
+            # 0.0 only for missing sides: SequenceMatcher('','') is 1.0
+            # in the reference, and the SQL oracle counts text_a = text_b
+            # ('' = '') as a perfect match
+            if not isinstance(p, str) or not isinstance(q, str):
+                out.append(0.0)
+                continue
+            if p == q:  # exact: equality ⟺ ratio 1.0; skips the matcher
+                out.append(1.0)
+                continue
+            sm = SequenceMatcher(None, p, q)
+            if threshold > 0.0 and (
+                sm.real_quick_ratio() < threshold or sm.quick_ratio() < threshold
+            ):
+                out.append(-1.0)
+            else:
+                out.append(sm.ratio())
+        return pd.Series(out)
+
+    return pandas_udf(_batch, "double")
 
 
 def similarity_ratio(a: Column, b: Column) -> Column:
     """difflib.SequenceMatcher.ratio, vectorized over Arrow batches
     (`tools/compare.py:184-185`). None on either side → 0.0; empty
-    strings score like the reference ('' vs '' → 1.0).
-
-    The pandas_udf is built lazily: decorating at import time parses the
-    DDL return type, which requires an active SparkContext.
-    """
-    global _RATIO_UDF
-    if _RATIO_UDF is None:
-
-        def _ratio_batch(x: pd.Series, y: pd.Series) -> pd.Series:
-            from difflib import SequenceMatcher
-
-            def ratio(p: str | None, q: str | None) -> float:
-                # 0.0 only for missing sides: SequenceMatcher('','') is
-                # 1.0 in the reference, and the SQL oracle counts
-                # text_a = text_b ('' = '') as a perfect match
-                if not isinstance(p, str) or not isinstance(q, str):
-                    return 0.0
-                if p == q:  # exact: equality ⟺ ratio 1.0; skips the matcher
-                    return 1.0
-                return SequenceMatcher(None, p, q).ratio()
-
-            return pd.Series([ratio(p, q) for p, q in zip(x, y)])
-
-        _RATIO_UDF = pandas_udf(_ratio_batch, "double")
-    return _RATIO_UDF(a, b)
+    strings score like the reference ('' vs '' → 1.0)."""
+    return _ratio_udf(0.0)(a, b)
 
 
 def positional_compare(engine_a: DataFrame, engine_b: DataFrame) -> DataFrame:
@@ -93,44 +107,6 @@ def compare_counters(compared: DataFrame) -> DataFrame:
         F.sum((F.col("status") == "mismatch").cast("int")).alias("mismatches"),
         F.sum(F.col("status").isin("a_only", "b_only").cast("int")).alias("engine_only"),
     )
-
-
-_THRESH_RATIO_UDFS: dict[float, object] = {}
-
-
-def _thresholded_ratio(a: Column, b: Column, threshold: float) -> Column:
-    """difflib ratio with the standard upper-bound short-circuit: pairs
-    whose real_quick_ratio/quick_ratio (cheap length/bag bounds, both ≥
-    the true ratio) fall below ``threshold`` score -1.0 instead of
-    running the O(len²) matcher. Exactness of the emitted output is
-    preserved (see best_fuzzy_match)."""
-    udf = _THRESH_RATIO_UDFS.get(threshold)
-    if udf is None:
-
-        def _batch(x: pd.Series, y: pd.Series) -> pd.Series:
-            from difflib import SequenceMatcher
-
-            out = []
-            for p, q in zip(x, y):
-                if not isinstance(p, str) or not isinstance(q, str):
-                    out.append(0.0)
-                    continue
-                if p == q:  # exact: equality ⟺ ratio 1.0
-                    out.append(1.0)
-                    continue
-                sm = SequenceMatcher(None, p, q)
-                if (
-                    sm.real_quick_ratio() < threshold
-                    or sm.quick_ratio() < threshold
-                ):
-                    out.append(-1.0)
-                else:
-                    out.append(sm.ratio())
-            return pd.Series(out)
-
-        udf = pandas_udf(_batch, "double")
-        _THRESH_RATIO_UDFS[threshold] = udf
-    return udf(a, b)
 
 
 def best_fuzzy_match(
@@ -173,7 +149,7 @@ def best_fuzzy_match(
         .filter(bound >= threshold)
         .withColumn(
             "ratio",
-            _thresholded_ratio(F.col("text_a"), F.col("text_b"), threshold),
+            _ratio_udf(threshold)(F.col("text_a"), F.col("text_b")),
         )
     )
     w = Window.partitionBy("doc_id", "panel_num", "pos_a").orderBy(

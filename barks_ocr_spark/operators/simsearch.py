@@ -1,20 +1,40 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over the ``embedding`` column (array<float>) of an
+embeddings table keyed by ``vec_id``.
 
-- ``brute_force_topk``: exact cosine top-k against a query vector.
-  The query is a literal folded into the plan (broadcast by value); the
-  scan is embarrassingly parallel, the only shuffle is the final top-k
-  (a TakeOrdered, not a full sort).
-- ``cosine_pairs``: all pairs ≥ threshold, via sign-LSH bucketing so the
-  self-join never goes O(n²) across buckets.
-- ``lsh_topk`` / ``lsh_write`` + ``lsh_topk_indexed``: the scale path —
-  prune with sign-LSH hamming distance, then exact-rescore only the
-  surviving fraction. The ``_write`` half materializes signatures at
-  write time so 100 TB queries never recompute them at read.
+Eight top-k operators share one exact-cosine re-rank tail
+(:func:`_top_k`: score, TakeOrdered by (score desc, vec_id)); they
+differ only in which rows reach it:
+
+- ``brute_force_topk``: every row. The query is a literal folded into
+  the plan (broadcast by value); the only shuffle is the final top-k (a
+  TakeOrdered, not a full sort).
+- ``lsh_topk`` / ``lsh_write`` + ``lsh_topk_indexed`` / ``lsh_band_write``
+  + ``lsh_topk_banded``: rows whose sign-LSH signature is within a
+  hamming budget of the query's (:func:`_within`). The ``_write`` halves
+  materialize signatures once so queries never recompute them; the
+  banded layout turns the probe into partition pruning.
+- ``ivf_topk`` / ``ivf_write`` + ``ivf_topk_indexed``: rows in the
+  ``nprobe`` IVF-flat cells nearest the query; the indexed table is
+  partitioned by cell, so a probe is partition pruning.
+- ``pq_topk`` / ``pq_write`` + ``pq_topk_indexed``: the ``k × refine``
+  best rows by product-quantization ADC distance
+  (:func:`_adc_candidates`: literal distance tables over the small
+  ``pq_codes`` column), broadcast-joined back for the re-rank.
+
+``cosine_pairs`` finds all pairs ≥ threshold, via sign-LSH bucketing so
+the self-join never goes O(n²) across buckets.
+
+Every numeric decision that prunes (signatures, cells, PQ codes, ADC
+distances) is exact int64 arithmetic on ⌊v·1e6⌋-quantized components
+(:func:`_quantized`) against LCG-derived integer literals, so the
+DuckDB oracles re-derive each decision exactly.
 
 Scoring strategy (measured at 2k and 512k rows × 64 dims, local[32]):
 
-- query-vector cosine (:func:`cosine_to_query`) and LSH signatures /
-  IVF cells are numpy matmuls in Arrow-batched ``pandas_udf``s.
+- query-vector cosine (:func:`cosine_to_query`), LSH signatures, IVF
+  cells and PQ codes are numpy matmuls in Arrow-batched ``pandas_udf``s
+  that share one batch boundary (:func:`_vectors`: length check and
+  stack of the valid vectors).
   Signatures: 0.61s vs 2.49s for the 16-plane HOF chain (higher-order
   functions evaluate per-element interpreted lambda closures, not
   codegen), and a fully unrolled 16×64-term codegen expression exceeds
@@ -31,7 +51,9 @@ Scoring strategy (measured at 2k and 512k rows × 64 dims, local[32]):
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
 
 import numpy as np
 import pandas as pd
@@ -40,6 +62,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from barks_ocr_spark.operators.cacheutil import materialize
+
+_ID = "vec_id"
+_VEC = "embedding"
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -61,7 +86,41 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-_COS_UDF_CACHE: dict = {}
+def _vectors(s: pd.Series, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """The Arrow-batch boundary of every vector kernel: ``ok`` masks the
+    rows holding a length-``dim`` vector (null and wrong-length rows are
+    False), and ``matrix`` stacks those vectors as float64 (value-exact
+    upcast of float32). A batch with no valid vector yields a
+    ``(0, dim)`` matrix, so kernels need no empty-batch branch."""
+    arr = s.to_numpy()
+    lens = np.fromiter(
+        (0 if x is None else len(x) for x in arr), dtype=np.int64, count=len(arr)
+    )
+    ok = lens == dim
+    return ok, np.vstack([np.empty((0, dim)), *arr[ok]])
+
+
+def _quantized(m: np.ndarray) -> np.ndarray:
+    """⌊v·1e6⌋ as int64 — the integer space every pruning decision uses."""
+    return np.floor(m * 1_000_000.0).astype(np.int64)
+
+
+@functools.cache
+def _cos_udf(query: tuple[float, ...]):
+    qa = np.array(query, dtype=np.float64)
+    qn = float(np.sqrt((qa * qa).sum()))
+
+    @F.pandas_udf("double")
+    def cos(s: pd.Series) -> pd.Series:
+        ok, m = _vectors(s, len(query))
+        out = np.zeros(len(s), dtype=np.float64)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            out[ok] = (m @ qa) / (np.sqrt((m * m).sum(axis=1)) * qn)
+        # mask length-mismatch rows to NULL (not NaN: Spark sorts
+        # NaN above every double, which would poison desc top-k)
+        return pd.Series(pd.arrays.FloatingArray(out, ~ok))
+
+    return cos
 
 
 def cosine_to_query(vec: Column, query_vec: list[float]) -> Column:
@@ -80,47 +139,26 @@ def cosine_to_query(vec: Column, query_vec: list[float]) -> Column:
     Rows whose vector length ≠ len(query) score null (the zip_with
     null-pad behavior); genuine 0/0 (zero vectors) stays NaN, exactly as
     JVM double division."""
-    key = tuple(float(x) for x in query_vec)
-    if key not in _COS_UDF_CACHE:
-        qa = np.array(key, dtype=np.float64)
-        qn = float(np.sqrt((qa * qa).sum()))
-        dim = len(key)
+    return _cos_udf(tuple(float(x) for x in query_vec))(vec)
 
-        @F.pandas_udf("double")
-        def cos(s: pd.Series) -> pd.Series:
-            n = len(s)
-            arr = s.to_numpy()
-            lens = np.fromiter(
-                (0 if x is None else len(x) for x in arr), dtype=np.int64, count=n
-            )
-            ok = np.flatnonzero(lens == dim)
-            out = np.zeros(n, dtype=np.float64)
-            if ok.size:
-                m = np.vstack([arr[i] for i in ok]).astype(np.float64)
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    out[ok] = (m @ qa) / (np.sqrt((m * m).sum(axis=1)) * qn)
-            # mask length-mismatch rows to NULL (not NaN: Spark sorts
-            # NaN above every double, which would poison desc top-k)
-            return pd.Series(pd.arrays.FloatingArray(out, lens != dim))
 
-        _COS_UDF_CACHE[key] = cos
-    return _COS_UDF_CACHE[key](vec)
+def _top_k(df: DataFrame, query_vec: list[float], k: int) -> DataFrame:
+    """The exact-cosine re-rank every top-k operator ends in: (vec_id,
+    score rounded to 6 places) of the ``k`` best rows of ``df``, ties to
+    the lower id — a TakeOrdered, never a full sort."""
+    score = cosine_to_query(F.col(_VEC), query_vec)
+    return (
+        df.select(F.col(_ID), F.round(score, 6).alias("score"))
+        .orderBy(F.desc("score"), F.col(_ID))
+        .limit(k)
+    )
 
 
 def brute_force_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, query_vec: list[float], k: int = 10
 ) -> DataFrame:
     """Exact cosine top-k of ``query_vec`` over the embeddings table."""
-    score = cosine_to_query(F.col(vec_col), query_vec)
-    return (
-        embeddings.select(F.col(id_col), F.round(score, 6).alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
-    )
+    return _top_k(embeddings, query_vec, k)
 
 
 _LCG_M = 2147483647
@@ -154,38 +192,24 @@ def sign_bits_py(vec: list[float], n_planes: int = 16, dim: int | None = None) -
     return total
 
 
-_SIG_UDF_CACHE: dict = {}
-
-
+@functools.cache
 def _sig_udf(n_planes: int, dim: int):
     """Arrow-batched signature kernel: one (rows × dim) · (dim × planes)
     int64 matmul per batch — exact integer arithmetic, same sign
     decisions as the SQL oracle's literal-weight dot products."""
-    key = (n_planes, dim)
-    if key not in _SIG_UDF_CACHE:
-        W = np.array(
-            [plane_weights_int(p, dim) for p in range(n_planes)], dtype=np.int64
-        ).T  # dim × planes
-        POW = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
+    W = np.array(
+        [plane_weights_int(p, dim) for p in range(n_planes)], dtype=np.int64
+    ).T  # dim × planes
+    POW = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
 
-        @F.pandas_udf("long")
-        def sig(s: pd.Series) -> pd.Series:
-            n = len(s)
-            out = np.zeros(n, dtype=np.int64)
-            arr = s.to_numpy()
-            lens = np.fromiter(
-                (0 if x is None else len(x) for x in arr), dtype=np.int64, count=n
-            )
-            ok = np.flatnonzero(lens == dim)
-            if ok.size:
-                m = np.vstack([arr[i] for i in ok]).astype(np.float64)
-                vint = np.floor(m * 1_000_000.0).astype(np.int64)
-                scores = vint @ W
-                out[ok] = ((scores > 0) * POW).sum(axis=1)
-            return pd.Series(out)
+    @F.pandas_udf("long")
+    def sig(s: pd.Series) -> pd.Series:
+        ok, m = _vectors(s, dim)
+        out = np.zeros(len(s), dtype=np.int64)
+        out[ok] = ((_quantized(m) @ W > 0) * POW).sum(axis=1)
+        return pd.Series(out)
 
-        _SIG_UDF_CACHE[key] = sig
-    return _SIG_UDF_CACHE[key]
+    return sig
 
 
 def sign_lsh_bits(vec: Column, n_planes: int = 16, dim: int = 64) -> Column:
@@ -206,6 +230,12 @@ def sign_lsh_bits(vec: Column, n_planes: int = 16, dim: int = 64) -> Column:
     return _sig_udf(n_planes, dim)(vec)
 
 
+def _within(sig: Column, q_sig: int, h: int) -> Column:
+    """Hamming prune: ``sig`` is at most ``h`` bits from ``q_sig`` — a
+    codegen'd bit_count, no Python."""
+    return F.bit_count(sig.bitwiseXOR(F.lit(q_sig))) <= h
+
+
 def centroid_ints(c: int, dim: int) -> list[int]:
     """Deterministic IVF centroid ``c`` as integers in [-1000, 1000] —
     same integer-LCG family as :func:`plane_weights_int`, disjoint seed
@@ -214,36 +244,21 @@ def centroid_ints(c: int, dim: int) -> list[int]:
     return plane_weights_int(c + 100_003, dim)
 
 
-_CELL_UDF_CACHE: dict = {}
-
-
+@functools.cache
 def _cell_udf(n_centroids: int, dim: int):
-    key = (n_centroids, dim)
-    if key not in _CELL_UDF_CACHE:
-        C = np.array(
-            [centroid_ints(c, dim) for c in range(n_centroids)], dtype=np.int64
-        ).T  # dim × centroids
+    C = np.array(
+        [centroid_ints(c, dim) for c in range(n_centroids)], dtype=np.int64
+    ).T  # dim × centroids
 
-        @F.pandas_udf("int")
-        def cell(s: pd.Series) -> pd.Series:
-            n = len(s)
-            arr = s.to_numpy()
-            lens = np.fromiter(
-                (0 if x is None else len(x) for x in arr), dtype=np.int64, count=n
-            )
-            ok = np.flatnonzero(lens == dim)
-            vals = np.full(n, -1, dtype=np.int64)
-            if ok.size:
-                m = np.vstack([arr[i] for i in ok]).astype(np.float64)
-                vint = np.floor(m * 1_000_000.0).astype(np.int64)
-                # np.argmax takes the FIRST maximum — ties to lowest cell
-                vals[ok] = np.argmax(vint @ C, axis=1)
-            out = pd.Series(vals, dtype="Int32")
-            out[vals < 0] = pd.NA  # length-mismatch rows: null cell
-            return out
+    @F.pandas_udf("int")
+    def cell(s: pd.Series) -> pd.Series:
+        ok, m = _vectors(s, dim)
+        vals = np.zeros(len(s), dtype=np.int32)
+        # np.argmax takes the FIRST maximum — ties to lowest cell
+        vals[ok] = np.argmax(_quantized(m) @ C, axis=1)
+        return pd.Series(pd.arrays.IntegerArray(vals, ~ok))
 
-        _CELL_UDF_CACHE[key] = cell
-    return _CELL_UDF_CACHE[key]
+    return cell
 
 
 def ivf_cell(vec: Column, n_centroids: int = 16, dim: int = 64) -> Column:
@@ -280,9 +295,6 @@ def ivf_topk(
     k: int = 10,
     n_centroids: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """IVF-flat approximate top-k: scan only the ``nprobe`` inverted
     lists nearest the query, exact-rescore their members.
@@ -293,25 +305,13 @@ def ivf_topk(
     nprobe = n_centroids it degrades gracefully to exact brute force
     (pinned by test_ivf_full_probe_equals_brute_force).
     """
-    if dim is None:
-        dim = len(query_vec)
     probe = ivf_probe_cells(query_vec, n_centroids, nprobe)
-    v = F.col(vec_col)
-    pruned = embeddings.filter(ivf_cell(v, n_centroids, dim).isin(probe))
-    score = cosine_to_query(v, query_vec)
-    return (
-        pruned.select(F.col(id_col), F.round(score, 6).alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
-    )
+    cell = ivf_cell(F.col(_VEC), n_centroids, len(query_vec))
+    return _top_k(embeddings.filter(cell.isin(probe)), query_vec, k)
 
 
 def ivf_write(
-    embeddings: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    vec_col: str = "embedding",
-    dim: int = 64,
+    embeddings: DataFrame, path: str, n_centroids: int = 16, dim: int = 64
 ) -> None:
     """Materialize the IVF index: embeddings written partitioned by cell.
 
@@ -322,9 +322,8 @@ def ivf_write(
     Repartitioning by cell before the write gives one file per cell per
     shuffle partition rather than every task writing every cell.
     """
-    v = F.col(vec_col)
     (
-        embeddings.withColumn("cell", ivf_cell(v, n_centroids, dim))
+        embeddings.withColumn("cell", ivf_cell(F.col(_VEC), n_centroids, dim))
         .repartition("cell")
         .write.mode("overwrite")
         .partitionBy("cell")
@@ -339,8 +338,6 @@ def ivf_topk_indexed(
     k: int = 10,
     n_centroids: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Top-k over a materialized IVF index (:func:`ivf_write` output).
 
@@ -351,20 +348,11 @@ def ivf_topk_indexed(
     read, decoded, or scored."""
     probe = ivf_probe_cells(query_vec, n_centroids, nprobe)
     pruned = spark.read.parquet(path).filter(F.col("cell").isin(probe))
-    score = cosine_to_query(F.col(vec_col), query_vec)
-    return (
-        pruned.select(F.col(id_col), F.round(score, 6).alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
-    )
+    return _top_k(pruned, query_vec, k)
 
 
 def lsh_write(
-    embeddings: DataFrame,
-    path: str,
-    n_planes: int = 16,
-    vec_col: str = "embedding",
-    dim: int = 64,
+    embeddings: DataFrame, path: str, n_planes: int = 16, dim: int = 64
 ) -> None:
     """Materialize sign-LSH signatures at write time — the sign-LSH
     analogue of :func:`ivf_write`: the signature matmul runs ONCE here,
@@ -380,9 +368,8 @@ def lsh_write(
     tables, pigeonhole-exact for h < B) so probes read band-bucket
     slivers; this single-table form keeps storage 1×.
     """
-    v = F.col(vec_col)
     (
-        embeddings.withColumn("sig", sign_lsh_bits(v, n_planes, dim))
+        embeddings.withColumn("sig", sign_lsh_bits(F.col(_VEC), n_planes, dim))
         .write.mode("overwrite")
         .parquet(path)
     )
@@ -395,26 +382,16 @@ def lsh_topk_indexed(
     k: int = 10,
     n_planes: int = 16,
     max_hamming: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k over a materialized LSH index (:func:`lsh_write`
     output): hamming-prune on the STORED signature column (no signature
     recompute — the plan contains no ArrowEvalPython stage, pinned by
     test_lsh_indexed_no_signature_recompute), exact-rescore survivors."""
-    if dim is None:
-        dim = len(query_vec)
-    q_sig = sign_bits_py(query_vec, n_planes, dim)
+    q_sig = sign_bits_py(query_vec, n_planes)
     pruned = spark.read.parquet(path).filter(
-        F.bit_count(F.col("sig").bitwiseXOR(F.lit(q_sig))) <= max_hamming
+        _within(F.col("sig"), q_sig, max_hamming)
     )
-    score = cosine_to_query(F.col(vec_col), query_vec)
-    return (
-        pruned.select(F.col(id_col), F.round(score, 6).alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
-    )
+    return _top_k(pruned, query_vec, k)
 
 
 def lsh_band_write(
@@ -422,8 +399,6 @@ def lsh_band_write(
     path: str,
     n_planes: int = 16,
     n_bands: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     dim: int = 64,
 ) -> None:
     """Banded multi-probe LSH index — the 10^12-row layout
@@ -446,10 +421,7 @@ def lsh_band_write(
         raise ValueError(f"n_planes={n_planes} not divisible by n_bands={n_bands}")
     band_bits = n_planes // n_bands
     mask = (1 << band_bits) - 1
-    v = F.col(vec_col)
-    embeddings.select(id_col, vec_col).write.mode("overwrite").parquet(
-        f"{path}/base"
-    )
+    embeddings.select(_ID, _VEC).write.mode("overwrite").parquet(f"{path}/base")
     band_structs = [
         F.struct(
             F.lit(i).alias("band"),
@@ -461,10 +433,10 @@ def lsh_band_write(
     ]
     (
         embeddings.select(
-            id_col, sign_lsh_bits(v, n_planes, dim).alias("sig")
+            _ID, sign_lsh_bits(F.col(_VEC), n_planes, dim).alias("sig")
         )
-        .select(id_col, "sig", F.explode(F.array(*band_structs)).alias("bv"))
-        .select(id_col, "sig", "bv.band", "bv.val")
+        .select(_ID, "sig", F.explode(F.array(*band_structs)).alias("bv"))
+        .select(_ID, "sig", "bv.band", "bv.val")
         .repartition("band", "val")
         .write.mode("overwrite")
         .partitionBy("band", "val")
@@ -480,9 +452,6 @@ def lsh_topk_banded(
     n_planes: int = 16,
     n_bands: int = 8,
     max_hamming: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Top-k over a banded multi-probe LSH index (:func:`lsh_band_write`
     output), exact vs :func:`lsh_topk` for max_hamming < n_bands.
@@ -500,9 +469,7 @@ def lsh_topk_banded(
             f"max_hamming={max_hamming} >= n_bands={n_bands}: the pigeonhole "
             "guarantee needs h < B (raise n_bands or use lsh_topk_indexed)"
         )
-    if dim is None:
-        dim = len(query_vec)
-    q_sig = sign_bits_py(query_vec, n_planes, dim)
+    q_sig = sign_bits_py(query_vec, n_planes)
     band_bits = n_planes // n_bands
     mask = (1 << band_bits) - 1
     probe = None
@@ -514,26 +481,18 @@ def lsh_topk_banded(
     cand = (
         spark.read.parquet(f"{path}/bands")
         .filter(probe)
-        .filter(F.bit_count(F.col("sig").bitwiseXOR(F.lit(q_sig))) <= max_hamming)
-        .select(id_col)
+        .filter(_within(F.col("sig"), q_sig, max_hamming))
+        .select(_ID)
         .distinct()
     )
-    score = cosine_to_query(F.col(vec_col), query_vec)
-    return (
-        spark.read.parquet(f"{path}/base")
-        .join(F.broadcast(cand), id_col)
-        .select(F.col(id_col), F.round(score, 6).alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
-    )
+    base = spark.read.parquet(f"{path}/base").join(F.broadcast(cand), _ID)
+    return _top_k(base, query_vec, k)
 
 
 def cosine_pairs(
     embeddings: DataFrame,
     threshold: float = 0.9,
     n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
 ) -> DataFrame:
     """Embedding near-dup pairs (id_a < id_b, cosine ≥ threshold).
@@ -545,10 +504,10 @@ def cosine_pairs(
     The verify cosine runs only on bucket-join survivors (O(candidates),
     not O(corpus)), so it keeps the dynamic-length HOF form — see the
     module docstring for why the scan paths don't."""
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col(_VEC).cast("array<double>")
     with_sig = materialize(  # feeds both self-join sides — LSH bits once
         embeddings.select(
-            F.col(id_col).alias("vid"), v.alias("v"),
+            F.col(_ID).alias("vid"), v.alias("v"),
             sign_lsh_bits(v, n_planes, dim).alias("sig"),
         )
     )
@@ -571,9 +530,6 @@ def lsh_topk(
     k: int = 10,
     n_planes: int = 16,
     max_hamming: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: prune candidates whose sign-LSH signature is
     > max_hamming bits from the query's, exact-rescore the rest.
@@ -587,22 +543,11 @@ def lsh_topk(
     brute force, so recall failures are visible by diffing against
     ``brute_force_topk`` on a sample.
     """
-    if dim is None:
-        dim = len(query_vec)
-    q_sig = sign_bits_py(query_vec, n_planes, dim)
-    v = F.col(vec_col)
-    with_sig = embeddings.select(
-        F.col(id_col), v.alias("v"), sign_lsh_bits(v, n_planes, dim).alias("sig")
-    )
-    pruned = with_sig.filter(
-        F.bit_count(F.col("sig").bitwiseXOR(F.lit(q_sig))) <= max_hamming
-    )
-    score = cosine_to_query(F.col("v"), query_vec)
-    return (
-        pruned.select(F.col(id_col), F.round(score, 6).alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
-    )
+    q_sig = sign_bits_py(query_vec, n_planes)
+    sig = sign_lsh_bits(F.col(_VEC), n_planes, len(query_vec))
+    with_sig = embeddings.select(_ID, _VEC, sig.alias("sig"))
+    pruned = with_sig.filter(_within(F.col("sig"), q_sig, max_hamming))
+    return _top_k(pruned, query_vec, k)
 
 
 # ── Product quantization (PQ / ADC) ────────────────────────────────────
@@ -673,43 +618,38 @@ def pq_train(
                 mask = assign == c
                 if mask.any():
                     C[c] = X[mask].mean(axis=0)
-        out[s] = np.floor(C * 1_000_000.0).astype(np.int64)
+        out[s] = _quantized(C)
     return out
 
 
-_PQ_UDF_CACHE: dict = {}
+def _codebook(m: int, n_codes: int, dim: int, codebook: np.ndarray | None):
+    """The int64 codebook in use: ``codebook`` (e.g. :func:`pq_train`
+    output) or the LCG default."""
+    if codebook is None:
+        return pq_codebook_int(m, n_codes, dim)
+    return np.asarray(codebook, dtype=np.int64)
 
 
-def _pq_encode_udf(m: int, n_codes: int, dim: int, codebook: np.ndarray | None):
-    key = (m, n_codes, dim, None if codebook is None else codebook.tobytes())
-    if key not in _PQ_UDF_CACHE:
-        CB = pq_codebook_int(m, n_codes, dim) if codebook is None else codebook
-        dsub = dim // m
+@functools.cache
+def _pq_encode_udf(m: int, n_codes: int, dim: int, codebook: bytes):
+    """Arrow-batched PQ encoder, keyed on the int64 codebook's bytes
+    (ndarrays are not hashable)."""
+    CB = np.frombuffer(codebook, dtype=np.int64).reshape(m, n_codes, dim // m)
 
-        @F.pandas_udf("array<int>")
-        def enc(s: pd.Series) -> pd.Series:
-            n = len(s)
-            arr = s.to_numpy()
-            lens = np.fromiter(
-                (0 if x is None else len(x) for x in arr), dtype=np.int64, count=n
-            )
-            ok = np.flatnonzero(lens == dim)
-            rows = np.full(n, None, dtype=object)
-            if ok.size:
-                V = np.vstack([arr[i] for i in ok]).astype(np.float64)
-                vint = np.floor(V * 1_000_000.0).astype(np.int64)
-                vsub = vint.reshape(len(ok), m, 1, dsub)
-                # (n, m, k): exact integer distances; argmin takes the
-                # FIRST minimum — ties to the lowest code, same as the
-                # oracle's ORDER BY d2, code
-                d2 = ((vsub - CB[None, :, :, :]) ** 2).sum(axis=3)
-                codes = np.argmin(d2, axis=2).astype(np.int32)
-                for j, i in enumerate(ok):
-                    rows[i] = codes[j].tolist()
-            return pd.Series(rows, dtype=object)
+    @F.pandas_udf("array<int>")
+    def enc(s: pd.Series) -> pd.Series:
+        ok, V = _vectors(s, dim)
+        vsub = _quantized(V).reshape(len(V), m, 1, dim // m)
+        # (n, m, k): exact integer distances; argmin takes the FIRST
+        # minimum — ties to the lowest code, same as the oracle's
+        # ORDER BY d2, code
+        codes = np.argmin(((vsub - CB[None]) ** 2).sum(axis=3), axis=2)
+        rows = np.full(len(s), None, dtype=object)
+        for i, c in zip(np.flatnonzero(ok), codes.tolist()):
+            rows[i] = c
+        return pd.Series(rows, dtype=object)
 
-        _PQ_UDF_CACHE[key] = enc
-    return _PQ_UDF_CACHE[key]
+    return enc
 
 
 def pq_encode(
@@ -717,15 +657,46 @@ def pq_encode(
     m: int = 8,
     n_codes: int = 16,
     dim: int = 64,
-    vec_col: str = "embedding",
     codebook: np.ndarray | None = None,
 ) -> DataFrame:
     """Append ``pq_codes`` (array<int>, length m; null for wrong-length
     vectors): per subspace, the integer-exact nearest codeword. Zero
     shuffle — at write time a production table stores this column
     (32× smaller than the raw vectors) and ADC queries scan only it."""
+    cb = _codebook(m, n_codes, dim, codebook).tobytes()
     return embeddings.withColumn(
-        "pq_codes", _pq_encode_udf(m, n_codes, dim, codebook)(F.col(vec_col))
+        "pq_codes", _pq_encode_udf(m, n_codes, dim, cb)(F.col(_VEC))
+    )
+
+
+def _adc_candidates(
+    coded: DataFrame,
+    query_vec: list[float],
+    m: int,
+    n_codes: int,
+    codebook: np.ndarray | None,
+    n: int,
+) -> DataFrame:
+    """Ids of the ``n`` rows of ``coded`` nearest the query by ADC: the
+    sum of m per-subspace query→codeword distance TABLE lookups on
+    ``pq_codes``. The tables are literal arrays folded into the plan, so
+    scoring is pure codegen arithmetic (no vector reads, no Python), and
+    the candidate stage is a TakeOrdered over (id, _adc) only."""
+    CB = _codebook(m, n_codes, len(query_vec), codebook)
+    qint = _quantized(np.asarray(query_vec, dtype=np.float64)).reshape(m, 1, -1)
+    T = ((qint - CB) ** 2).sum(axis=2)  # (m, n_codes) int64
+    approx = functools.reduce(
+        operator.add,
+        (
+            F.array(*[F.lit(int(t)) for t in T[s]])[F.col("pq_codes")[s]]
+            for s in range(m)
+        ),
+    )
+    return (
+        coded.select(_ID, approx.alias("_adc"))
+        .orderBy(F.asc("_adc"), F.col(_ID))
+        .limit(n)
+        .select(_ID)
     )
 
 
@@ -735,19 +706,13 @@ def pq_topk(
     k: int = 10,
     m: int = 8,
     n_codes: int = 16,
-    dim: int = 64,
     refine: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     codebook: np.ndarray | None = None,
 ) -> DataFrame:
-    """PQ-ADC top-k with exact re-rank: score every row by the sum of m
-    per-subspace query→codeword distance TABLE lookups (the tables are
-    literal arrays folded into the plan — scoring is pure codegen
-    arithmetic over the tiny ``pq_codes`` column, no vector reads and
-    no Python), TakeOrdered the k×refine best approximate candidates,
-    then exact-cosine re-rank only those. Output: (id, score) like
-    :func:`brute_force_topk`.
+    """PQ-ADC top-k with exact re-rank: score every row by ADC
+    (:func:`_adc_candidates`), TakeOrdered the k×refine best approximate
+    candidates, then exact-cosine re-rank only those. Output: (id,
+    score) like :func:`brute_force_topk`.
 
     Scale shape: the corpus-wide candidate stage is TakeOrdered over
     (id, _adc) ONLY — the raw vector column never rides the sort
@@ -760,44 +725,17 @@ def pq_topk(
     asserted by test_pq_indexed_no_encode_recompute. Approximation
     quality rides the codebook: LCG default for engine-replayable
     tests, :func:`pq_train` output for production."""
-    CB = pq_codebook_int(m, n_codes, dim) if codebook is None else codebook
-    dsub = dim // m
-    qint = np.floor(np.asarray(query_vec, dtype=np.float64) * 1_000_000.0).astype(
-        np.int64
-    ).reshape(m, 1, dsub)
-    T = ((qint - CB) ** 2).sum(axis=2)  # (m, n_codes) int64
+    dim = len(query_vec)
     # Wrong-length vectors are pruned with a cheap JVM size() filter
     # BEFORE the encode — filtering on isnotnull(pq_codes) instead
     # makes ExtractPythonUDFs materialize the encode kernel TWICE (once
     # under the pushed-down filter, once for the ADC projection); the
     # duplicated-UDF plan was caught by the indexed-vs-inline plan pin.
     coded = pq_encode(
-        embeddings.filter(F.size(F.col(vec_col)) == dim),
-        m,
-        n_codes,
-        dim,
-        vec_col,
-        codebook,
+        embeddings.filter(F.size(F.col(_VEC)) == dim), m, n_codes, dim, codebook
     )
-    tables = [
-        F.array(*[F.lit(int(T[s, c])) for c in range(n_codes)]) for s in range(m)
-    ]
-    approx = tables[0][F.col("pq_codes")[0]]
-    for s in range(1, m):
-        approx = approx + tables[s][F.col("pq_codes")[s]]
-    cand = (
-        coded.select(id_col, approx.alias("_adc"))
-        .orderBy(F.asc("_adc"), F.col(id_col))
-        .limit(k * refine)
-        .select(id_col)
-    )
-    score = cosine_to_query(F.col(vec_col), query_vec)
-    return (
-        embeddings.join(F.broadcast(cand), id_col)
-        .select(F.col(id_col), F.round(score, 6).alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
-    )
+    cand = _adc_candidates(coded, query_vec, m, n_codes, codebook, k * refine)
+    return _top_k(embeddings.join(F.broadcast(cand), _ID), query_vec, k)
 
 
 def pq_write(
@@ -806,7 +744,6 @@ def pq_write(
     m: int = 8,
     n_codes: int = 16,
     dim: int = 64,
-    vec_col: str = "embedding",
     codebook: np.ndarray | None = None,
 ) -> None:
     """Materialize the PQ index: embeddings written WITH their
@@ -818,7 +755,7 @@ def pq_write(
     scans — 32× less I/O than the vector column, which columnar
     projection skips entirely until the re-rank."""
     (
-        pq_encode(embeddings, m, n_codes, dim, vec_col, codebook)
+        pq_encode(embeddings, m, n_codes, dim, codebook)
         .write.mode("overwrite")
         .parquet(path)
     )
@@ -831,47 +768,19 @@ def pq_topk_indexed(
     k: int = 10,
     m: int = 8,
     n_codes: int = 16,
-    dim: int = 64,
     refine: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     codebook: np.ndarray | None = None,
 ) -> DataFrame:
     """PQ-ADC top-k over a materialized index (:func:`pq_write`
     output): no encode at read time — the exact-cosine rescore is
     the plan's ONLY Arrow stage (pinned by
-    test_pq_indexed_no_encode_recompute) — literal distance-table
-    lookups over the stored codes, TakeOrdered over (id, _adc) only
-    (the corpus-wide scan reads the code column, never the vectors —
-    pinned by test_pq_candidate_scan_never_reads_vectors), then a
-    broadcast join back on id fetches the ≤ k×refine candidate vectors
-    for the exact re-rank."""
-    CB = pq_codebook_int(m, n_codes, dim) if codebook is None else codebook
-    dsub = dim // m
-    qint = np.floor(
-        np.asarray(query_vec, dtype=np.float64) * 1_000_000.0
-    ).astype(np.int64).reshape(m, 1, dsub)
-    T = ((qint - CB) ** 2).sum(axis=2)
-    tables = [
-        F.array(*[F.lit(int(T[s, c])) for c in range(n_codes)]) for s in range(m)
-    ]
-    approx = tables[0][F.col("pq_codes")[0]]
-    for s in range(1, m):
-        approx = approx + tables[s][F.col("pq_codes")[s]]
-    cand = (
-        spark.read.parquet(path)
-        .filter(F.col("pq_codes").isNotNull())
-        .select(id_col, approx.alias("_adc"))
-        .orderBy(F.asc("_adc"), F.col(id_col))
-        .limit(k * refine)
-        .select(id_col)
-    )
-    score = cosine_to_query(F.col(vec_col), query_vec)
-    return (
-        spark.read.parquet(path)
-        .select(id_col, vec_col)
-        .join(F.broadcast(cand), id_col)
-        .select(F.col(id_col), F.round(score, 6).alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
-    )
+    test_pq_indexed_no_encode_recompute) — ADC over the stored codes
+    (:func:`_adc_candidates`; the corpus-wide scan reads the code
+    column, never the vectors — pinned by
+    test_pq_candidate_scan_never_reads_vectors), then a broadcast join
+    back on id fetches the ≤ k×refine candidate vectors for the exact
+    re-rank."""
+    coded = spark.read.parquet(path).filter(F.col("pq_codes").isNotNull())
+    cand = _adc_candidates(coded, query_vec, m, n_codes, codebook, k * refine)
+    base = spark.read.parquet(path).select(_ID, _VEC).join(F.broadcast(cand), _ID)
+    return _top_k(base, query_vec, k)

@@ -14,6 +14,7 @@ Cross-engine value-parity rules used throughout:
 from __future__ import annotations
 
 import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1972,14 +1973,13 @@ ORDER BY cnt DESC, doc_id
 _QUERY_VEC_ID = 0
 
 
-def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
-    row = (
-        load(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") == _QUERY_VEC_ID)
-        .select("embedding")
-        .first()
-    )
-    return [float(v) for v in row["embedding"]]
+def _ann_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[float]]:
+    """The ANN queries' inputs: the embeddings corpus without the query
+    row, and the query row's vector."""
+    emb = load(spark, sf_dir, "embeddings")
+    row = emb.filter(F.col("vec_id") == _QUERY_VEC_ID).select("embedding").first()
+    q = [float(v) for v in row["embedding"]]
+    return emb.filter(F.col("vec_id") != _QUERY_VEC_ID), q
 
 
 def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1987,8 +1987,8 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle replays every encode/score/candidate decision exactly —
     the oracle validates the PQ machinery itself, not agreement with
     exact search, which is codebook-quality-dependent by design)."""
-    emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") != _QUERY_VEC_ID)
-    return simsearch.pq_topk(emb, _query_vec(spark, sf_dir), k=10)
+    emb, q = _ann_inputs(spark, sf_dir)
+    return simsearch.pq_topk(emb, q, k=10)
 
 
 def _pq_oracle_sql(m: int = 8, n_codes: int = 16, dim: int = 64,
@@ -1996,11 +1996,9 @@ def _pq_oracle_sql(m: int = 8, n_codes: int = 16, dim: int = 64,
     """Replay PQ-ADC exactly: codebook literals from the same LCG,
     integer-exact encode (argmin ties to lowest code), query distance
     tables, candidate TakeOrdered, exact-cosine re-rank."""
-    from barks_ocr_spark.operators.simsearch import pq_codeword_ints
-
     dsub = dim // m
     cb_rows = ",\n    ".join(
-        f"({s}, {c}, {[w * 1000 for w in pq_codeword_ints(s, c, dsub)]})"
+        f"({s}, {c}, {[w * 1000 for w in simsearch.pq_codeword_ints(s, c, dsub)]})"
         for s in range(m)
         for c in range(n_codes)
     )
@@ -2050,8 +2048,8 @@ _SQL_PQ_TOPK = _pq_oracle_sql()
 
 
 def q_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") != _QUERY_VEC_ID)
-    return simsearch.brute_force_topk(emb, _query_vec(spark, sf_dir), k=10)
+    emb, q = _ann_inputs(spark, sf_dir)
+    return simsearch.brute_force_topk(emb, q, k=10)
 
 
 _SQL_TOPK_COSINE = f"""
@@ -2074,10 +2072,8 @@ def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot products (simsearch.sign_lsh_bits), so DuckDB re-derives the
     identical signatures, prune set, and rescored top-k — prune + rescore
     are both checked, not just recall."""
-    emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") != _QUERY_VEC_ID)
-    return simsearch.lsh_topk(
-        emb, _query_vec(spark, sf_dir), k=10, n_planes=16, max_hamming=6, dim=64
-    )
+    emb, q = _ann_inputs(spark, sf_dir)
+    return simsearch.lsh_topk(emb, q, k=10, n_planes=16, max_hamming=6)
 
 
 def _lsh_planes_sql(n_planes: int = 16, dim: int = 64) -> str:
@@ -2128,10 +2124,8 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exact integer argmax (ties → lowest cell), so DuckDB re-derives
     the identical cells, probe set, and rescored top-k — the inverted-
     list prune is checked, not just recall."""
-    emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") != _QUERY_VEC_ID)
-    return simsearch.ivf_topk(
-        emb, _query_vec(spark, sf_dir), k=10, n_centroids=16, nprobe=4, dim=64
-    )
+    emb, q = _ann_inputs(spark, sf_dir)
+    return simsearch.ivf_topk(emb, q, k=10, n_centroids=16, nprobe=4)
 
 
 def _ivf_cents_sql(n_centroids: int = 16, dim: int = 64) -> str:
@@ -2181,9 +2175,7 @@ def _index_dir(sf_dir: str, kind: str) -> str:
     """Deterministic per-sf scratch dir for materialized ANN indexes —
     overwritten each run, so repeated driver-gate runs never accumulate
     orphan directories (one dir per (kind, sf))."""
-    import re as _re
-
-    tag = _re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+    tag = re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
     return f"/tmp/barks_ann_idx/{kind}_{tag}"
 
 
@@ -2194,11 +2186,11 @@ def q_lsh_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pinned by test_lsh_indexed_no_signature_recompute). Same oracle as
     lsh_topk: the result must be independent of where signatures are
     computed."""
-    emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") != _QUERY_VEC_ID)
+    emb, q = _ann_inputs(spark, sf_dir)
     path = _index_dir(sf_dir, "lsh")
     simsearch.lsh_write(emb, path, n_planes=16, dim=64)
     return simsearch.lsh_topk_indexed(
-        spark, path, _query_vec(spark, sf_dir), k=10, n_planes=16, max_hamming=6
+        spark, path, q, k=10, n_planes=16, max_hamming=6
     )
 
 
@@ -2208,17 +2200,11 @@ def q_lsh_topk_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan (pinned by test_lsh_banded_partition_pruning), pigeonhole-exact
     at max_hamming 6 < 8 bands. Same oracle as lsh_topk — the banded
     layout must not change the survivor set."""
-    emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") != _QUERY_VEC_ID)
+    emb, q = _ann_inputs(spark, sf_dir)
     path = _index_dir(sf_dir, "lshband")
     simsearch.lsh_band_write(emb, path, n_planes=16, n_bands=8, dim=64)
     return simsearch.lsh_topk_banded(
-        spark,
-        path,
-        _query_vec(spark, sf_dir),
-        k=10,
-        n_planes=16,
-        n_bands=8,
-        max_hamming=6,
+        spark, path, q, k=10, n_planes=16, n_bands=8, max_hamming=6
     )
 
 
@@ -2227,11 +2213,11 @@ def q_ivf_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (simsearch.ivf_write): the probe is parquet partition pruning
     (pinned by test_ivf_indexed_partition_pruning). Same oracle as
     ivf_topk — write-time vs read-time cell assignment must agree."""
-    emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") != _QUERY_VEC_ID)
+    emb, q = _ann_inputs(spark, sf_dir)
     path = _index_dir(sf_dir, "ivf")
     simsearch.ivf_write(emb, path, n_centroids=16, dim=64)
     return simsearch.ivf_topk_indexed(
-        spark, path, _query_vec(spark, sf_dir), k=10, n_centroids=16, nprobe=4
+        spark, path, q, k=10, n_centroids=16, nprobe=4
     )
 
 
@@ -2240,10 +2226,10 @@ def q_pq_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (simsearch.pq_write): read-time scoring is pure codegen over the
     stored codes (pinned by test_pq_indexed_no_encode_recompute). Same
     oracle as pq_topk — write-time vs read-time encoding must agree."""
-    emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") != _QUERY_VEC_ID)
+    emb, q = _ann_inputs(spark, sf_dir)
     path = _index_dir(sf_dir, "pq")
     simsearch.pq_write(emb, path)
-    return simsearch.pq_topk_indexed(spark, path, _query_vec(spark, sf_dir), k=10)
+    return simsearch.pq_topk_indexed(spark, path, q, k=10)
 
 
 def q_pq_topk_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2256,7 +2242,7 @@ def q_pq_topk_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_pq_trained_codebook_end_to_end."""
     import numpy as np
 
-    emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") != _QUERY_VEC_ID)
+    emb, q = _ann_inputs(spark, sf_dir)
     sample = np.array(
         [
             list(r["embedding"])
@@ -2267,9 +2253,7 @@ def q_pq_topk_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = simsearch.pq_train(sample, m=8, n_codes=16, seed=7)
     path = _index_dir(sf_dir, "pqtrained")
     simsearch.pq_write(emb, path, codebook=cb)
-    return simsearch.pq_topk_indexed(
-        spark, path, _query_vec(spark, sf_dir), k=10, codebook=cb
-    )
+    return simsearch.pq_topk_indexed(spark, path, q, k=10, codebook=cb)
 
 
 def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:

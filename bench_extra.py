@@ -1,58 +1,41 @@
-"""Extra benchmarks for optimization work (guide §1) — bench.py stays
-frozen for the driver; all ad-hoc measurement lives here.
+"""Extra benchmarks for optimization work (guide §1): ad-hoc timing and
+plan dumps, on bench.py's session and timing loop.
 
 Usage:
     python bench_extra.py time q1 q2 ...   [--sf /root/testdata/sf1.0] [--n 2]
     python bench_extra.py plan q1 q2 ...   [--sf ...] [--tag before]
     python bench_extra.py time-all         [--sf ...]
 
-`time` mirrors bench.py's methodology exactly (df.count(), best-of-N,
-operator caches released between runs) so numbers are comparable to the
-driver's BENCH_rNN windows. `plan` writes .explain("formatted") to
+`time` runs bench.py's own loop (``bench.time_query``: df.count(),
+best-of-N, operator caches released between runs), so numbers are
+comparable to the BENCH_rNN windows. `plan` writes .explain("formatted") to
 plans/r07/<query>_<tag>.txt for the plan-pin deliverable.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+import bench  # noqa: E402 - needs the repo root on sys.path
+
 REPO = Path(__file__).resolve().parent
 
 
-def _spark():
-    from barks_ocr_spark.session import get_spark
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(
-        "bench-extra", master=f"local[{cpus}]", shuffle_partitions=cpus
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
-
-
 def cmd_time(names: list[str], sf_dir: str, n_runs: int) -> None:
-    from barks_ocr_spark.operators.cacheutil import unpersist_intermediates
     from barks_ocr_spark.plans import queries as Q
 
-    spark = _spark()
+    spark = bench.session("bench-extra")
     qs = Q.queries()
     # warm the JVM/Arrow path once (same as bench.py)
     qs["pricing_summary"](spark, sf_dir).count()
     out: dict[str, dict] = {}
     for name in names:
         spark.sparkContext.setJobDescription(f"bench_extra:{name}")
-        samples = []
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).count()
-            samples.append(round(time.perf_counter() - t0, 3))
-            unpersist_intermediates()
+        samples = bench.time_query(spark, qs[name], sf_dir, n_runs)
         out[name] = {"best": min(samples), "samples": samples}
         print(json.dumps({name: out[name]}), flush=True)
     total = round(sum(v["best"] for v in out.values()), 3)
@@ -63,7 +46,7 @@ def cmd_time(names: list[str], sf_dir: str, n_runs: int) -> None:
 def cmd_plan(names: list[str], sf_dir: str, tag: str) -> None:
     from barks_ocr_spark.plans import queries as Q
 
-    spark = _spark()
+    spark = bench.session("bench-extra")
     qs = Q.queries()
     dest = REPO / "plans" / "r07"
     dest.mkdir(parents=True, exist_ok=True)
@@ -101,8 +84,6 @@ def main() -> None:
     if cmd == "time":
         cmd_time(names, sf_dir, n_runs)
     elif cmd == "time-all":
-        import bench
-
         cmd_time(bench.HEADLINE, sf_dir, n_runs)
     elif cmd == "plan":
         cmd_plan(names, sf_dir, tag)

@@ -52,6 +52,39 @@ def test_best_fuzzy_match(spark):
     assert out[0]["ratio"] >= 0.9
 
 
+def test_similarity_ratio_matches_difflib(spark):
+    from difflib import SequenceMatcher
+
+    from pyspark.sql import functions as F
+
+    pairs = [
+        (None, "ABC"),
+        ("ABC", None),
+        ("", ""),
+        ("", "ABC"),
+        ("HELLO THERE", "HELLO THERE"),
+        ("HELLO THERE", "HELLO THERE!"),
+        ("THE QUICK BROWN FOX", "totally unrelated words"),
+    ]
+    df = spark.createDataFrame(
+        [(i, p, q) for i, (p, q) in enumerate(pairs)], "i int, a string, b string"
+    )
+    got = [
+        r["r"]
+        for r in df.select(
+            "i", compare.similarity_ratio(F.col("a"), F.col("b")).alias("r")
+        )
+        .orderBy("i")
+        .collect()
+    ]
+    # a missing side scores 0.0; everything else is difflib's own ratio
+    want = [
+        0.0 if p is None or q is None else SequenceMatcher(None, p, q).ratio()
+        for p, q in pairs
+    ]
+    assert got == want
+
+
 def test_rewrap_to_pattern():
     out = layout.rewrap_to_pattern("a b c d e f", "x x\nx x\nx x")
     assert out == "a b\nc d\ne f"

@@ -275,7 +275,7 @@ def test_ivf_full_probe_equals_brute_force(spark):
     full = [
         r["vec_id"]
         for r in simsearch.ivf_topk(
-            emb, q, k=3, n_centroids=8, nprobe=8, dim=4
+            emb, q, k=3, n_centroids=8, nprobe=8
         ).collect()
     ]
     assert full == bf
@@ -286,7 +286,7 @@ def test_ivf_probe_prunes_to_query_cells(spark):
     q = [1.0, 0.0, 0.0, 0.0]
     probe = simsearch.ivf_probe_cells(q, n_centroids=8, nprobe=2)
     assert len(probe) == 2 and len(set(probe)) == 2
-    out = simsearch.ivf_topk(emb, q, k=10, n_centroids=8, nprobe=2, dim=4)
+    out = simsearch.ivf_topk(emb, q, k=10, n_centroids=8, nprobe=2)
     from pyspark.sql import functions as SF
 
     cells = (
@@ -314,7 +314,7 @@ def test_ivf_indexed_matches_on_the_fly(spark, tmp_path):
     path = str(tmp_path / "ivf_idx")
     simsearch.ivf_write(emb, path, n_centroids=8, dim=4)
     q = [1.0, 0.0, 0.0, 0.0]
-    direct = simsearch.ivf_topk(emb, q, k=4, n_centroids=8, nprobe=3, dim=4)
+    direct = simsearch.ivf_topk(emb, q, k=4, n_centroids=8, nprobe=3)
     indexed = simsearch.ivf_topk_indexed(spark, path, q, k=4, n_centroids=8, nprobe=3)
     assert sorted(map(tuple, indexed.collect())) == sorted(map(tuple, direct.collect()))
 
@@ -454,6 +454,38 @@ def test_sign_bits_py_matches_column_form(spark):
     ).collect()
     for r in rows:
         assert simsearch.sign_bits_py(list(r["v"]), 16, 4) == r["sig"]
+
+
+def test_vector_kernels_on_batch_without_valid_vector(spark):
+    # one Arrow batch of null, wrong-length and zero vectors: at dim 64
+    # no row is valid, so every kernel sees an empty vector matrix
+    import math
+
+    df = spark.createDataFrame(
+        [(1, None), (2, [1.0, 2.0]), (3, [0.0, 0.0, 0.0, 0.0])],
+        "vec_id long, embedding array<float>",
+    ).coalesce(1)
+    v = F.col("embedding")
+    rows = (
+        simsearch.pq_encode(df)
+        .select(
+            "vec_id",
+            "pq_codes",
+            simsearch.cosine_to_query(v, [1.0, 0.0, 0.0, 0.0]).alias("cos4"),
+            simsearch.cosine_to_query(v, [1.0, 0.0, 0.0]).alias("cos3"),
+            simsearch.sign_lsh_bits(v, 16, 64).alias("sig"),
+            simsearch.ivf_cell(v, 16, 64).alias("cell"),
+        )
+        .orderBy("vec_id")
+        .collect()
+    )
+    assert [r["pq_codes"] for r in rows] == [None] * 3
+    assert [r["cos3"] for r in rows] == [None] * 3
+    assert [r["sig"] for r in rows] == [0] * 3
+    assert [r["cell"] for r in rows] == [None] * 3
+    # at the query's length 4 only the zero vector is valid: 0/0 is NaN
+    assert rows[0]["cos4"] is None and rows[1]["cos4"] is None
+    assert math.isnan(rows[2]["cos4"])
 
 
 def test_simhash_identical_docs_pair_at_hamming_zero(spark):
